@@ -4,14 +4,20 @@ The reference's C sink (src/cdc_webhook.c:121-237) posts one payload per
 row with libcurl, re-initializing curl per call (:175,220) and sleeping
 the backend between retries (:190). This sink:
 
-  * runs in foreachBatch on executors — delivery parallelism = batch
-    partitions;
-  * pools one HTTP connection per (partition, host) — stdlib
+  * runs in foreachBatch on executors, in delivery LANES: each partition's
+    rows are grouped by ordering key, and up to
+    defaultParallelism // (delivery partitions) key groups are posted at
+    once on threads inside the partition's Python task, so in-flight
+    POSTs per batch stay at or below the scheduler's core count
+    (`delivery_lanes`);
+  * pools one HTTP connection per (lane, destination) — stdlib
     http.client, keep-alive across rows (amortizing what the reference
-    pays per row);
-  * delivers per key strictly in `seq` order within a partition
-    (sortWithinPartitions after hash-partitioning on key — SURVEY.md §7
-    hard-point 3);
+    pays per row) — and closes every lane's connections when the
+    delivery call returns;
+  * delivers per key strictly in `seq` order: hash-partitioning on the
+    key puts all of a row's changes in one partition,
+    sortWithinPartitions orders them, and one lane posts a key's rows
+    serially (SURVEY.md §7 hard-point 3);
   * never sleeps: retries within a batch are immediate, bounded by the
     attempt budget retry_number+1 (src/cdc_webhook.c:178); *scheduled*
     backoff lives in the async queue (queue.py), where it is data
@@ -28,7 +34,9 @@ HTTP success = status in [200, 300) (src/cdc_webhook.c:137-140).
 
 from __future__ import annotations
 
+import concurrent.futures
 import http.client
+import queue
 import time
 import urllib.parse
 from dataclasses import dataclass
@@ -107,20 +115,20 @@ def post_once(
         return -1, str(exc), None, None
 
 
-def deliver_rows_per_event(
-    rows,
-    headers: dict[str, str],
-    attempt_budget: int,
-) -> list[Attempt]:
-    """Deliver an iterator of (event_id, payload, url, timeout) rows
-    serially, pooling one connection per (scheme, host, port) so a
-    multi-subscription queue reuses sockets per destination. Each event
-    is delivered with ITS OWN url and timeout (the reference stores both
-    per event in event_log, cdc_webhook--1.0.sql:30-34 — a queue holding
-    events from several subscriptions must not deliver them all with one
-    snapshot config)."""
+def delivery_lanes(rdd) -> int:
+    """Lanes per delivery partition: the scheduler's cores spread over
+    the partitions of the delivery RDD, at least one. In-flight POSTs
+    per batch then stay at or below defaultParallelism on a laptop or a
+    cluster — a batch the shuffle coalesced to one partition gets every
+    core's worth of lanes inside its one task."""
+    parts = max(1, rdd.getNumPartitions())
+    return max(1, rdd.context.defaultParallelism // parts)
+
+
+def _deliver_key_group(rows, headers, attempt_budget, conns) -> list[Attempt]:
+    """Deliver one key's rows serially, in input order, reusing (and
+    updating) the lane's connection pool `conns`."""
     attempts: list[Attempt] = []
-    conns: dict[tuple, http.client.HTTPConnection | None] = {}
     for event_id, payload, url, timeout in rows:
         parsed = urllib.parse.urlparse(url)
         pool_key = (parsed.scheme, parsed.hostname, parsed.port, timeout)
@@ -141,19 +149,59 @@ def deliver_rows_per_event(
     return attempts
 
 
-def deliver_rows(
+def deliver_rows_per_event(
     rows,
-    url: str,
     headers: dict[str, str],
-    cfg: SubscriptionConfig,
+    attempt_budget: int,
+    lanes: int,
 ) -> list[Attempt]:
-    """Deliver an iterator of (event_id, payload) rows serially over one
-    pooled connection; per-row attempt budget = retry_number + 1."""
-    return deliver_rows_per_event(
-        ((event_id, payload, url, cfg.timeout) for event_id, payload in rows),
-        headers,
-        cfg.attempt_budget,
-    )
+    """Deliver an iterable of (key, event_id, payload, url, timeout) rows.
+
+    Rows are grouped by ordering `key` in input order. Up to `lanes` key
+    groups are delivered at once, one thread per lane; a key's rows stay
+    serial and in input order on one lane, so a slow or dead endpoint
+    holds up only the keys its lane is working through. Each lane pools
+    one connection per (scheme, host, port, timeout), so a
+    multi-subscription queue reuses sockets per destination, and every
+    lane's connections are closed before this returns. Each event is
+    delivered with ITS OWN url and timeout (the reference stores both
+    per event in event_log, cdc_webhook--1.0.sql:30-34 — a queue holding
+    events from several subscriptions must not deliver them all with one
+    snapshot config). Each row gets up to `attempt_budget` immediate
+    tries, stopping at the first 2xx.
+
+    Returns the attempts grouped by key, keys in order of first
+    appearance, each key's attempts in delivery order."""
+    groups: dict = {}
+    for key, *row in rows:
+        groups.setdefault(key, []).append(row)
+    group_rows = list(groups.values())
+    results: list[list[Attempt]] = [[] for _ in group_rows]
+    todo: queue.SimpleQueue[int] = queue.SimpleQueue()
+    for i in range(len(group_rows)):
+        todo.put(i)
+
+    def _lane() -> None:
+        conns: dict[tuple, http.client.HTTPConnection | None] = {}
+        try:
+            while True:
+                try:
+                    i = todo.get_nowait()
+                except queue.Empty:
+                    return
+                results[i] = _deliver_key_group(
+                    group_rows[i], headers, attempt_budget, conns
+                )
+        finally:
+            for conn in conns.values():
+                if conn is not None:
+                    conn.close()
+
+    n_lanes = max(1, min(lanes, len(group_rows)))
+    with concurrent.futures.ThreadPoolExecutor(n_lanes) as pool:
+        for fut in [pool.submit(_lane) for _ in range(n_lanes)]:
+            fut.result()
+    return [a for group in results for a in group]
 
 
 _ATTEMPT_LOG_SCHEMA = (
@@ -231,9 +279,11 @@ class WebhookSink:
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         cfg, url, headers = self.cfg, self.url, self.headers
-        # per-key ordering (SURVEY.md §7 hard-point 3): ordering unit = the monitored row's key (falling back to the
-        # event id for keyless feeds): hash-partition so all changes of a
-        # row land in one partition, then deliver in seq order within it
+        # per-key ordering (SURVEY.md §7 hard-point 3): ordering unit =
+        # the monitored row's key (falling back to the event id for
+        # keyless feeds): hash-partition so all changes of a row land in
+        # one partition, sort them into seq order there, and deliver
+        # each key serially on one lane
         ordered = (
             batch.select(
                 F.col("envelope.id").alias("event_id"),
@@ -243,11 +293,18 @@ class WebhookSink:
             )
             .repartition(F.col("row_key"))
             .sortWithinPartitions("row_key", "seq")
+            .rdd
         )
+        lanes = delivery_lanes(ordered)
 
         def _deliver_partition(it):
-            rows = [(r.event_id, r.payload) for r in it]
-            for a in deliver_rows(rows, url, headers, cfg):
+            rows = (
+                (r.row_key, r.event_id, r.payload, url, cfg.timeout)
+                for r in it
+            )
+            for a in deliver_rows_per_event(
+                rows, headers, cfg.attempt_budget, lanes
+            ):
                 yield (
                     a.event_id, a.attempt, a.status, a.ok, a.error, a.at,
                     a.response,
@@ -257,39 +314,46 @@ class WebhookSink:
         # parquet write of this batch's attempt log, executor-side,
         # into the batch's OWN subdirectory (mode-overwrite, so a
         # foreachBatch replay rewrites instead of duplicating). The
-        # aggregate and the failure subset are then computed by reading
-        # the written FILES back — a persist + second action would
+        # counters and the failure subset then come from ONE aggregate
+        # over the written FILES — a persist + second action would
         # re-execute _deliver_partition (re-POSTing webhooks) whenever
         # a cached partition is lost on a real cluster.
         import os as _os
 
         spark = batch.sparkSession
-        rdd = ordered.rdd.mapPartitions(_deliver_partition)
-        adf = spark.createDataFrame(rdd, _ATTEMPT_LOG_SCHEMA)
+        adf = spark.createDataFrame(
+            ordered.mapPartitions(_deliver_partition), _ATTEMPT_LOG_SCHEMA
+        )
         batch_dir = _os.path.join(self.attempts_path, f"batch={batch_id}")
         adf.write.mode("overwrite").parquet(batch_dir)
-        logged = spark.read.schema(_ATTEMPT_LOG_SCHEMA).parquet(batch_dir)
-        agg = logged.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col("ok")).alias("n_ok"),
-        ).collect()[0]
+        failed_last = (F.col("attempt") == cfg.attempt_budget - 1) & ~F.col("ok")
+        agg = (
+            spark.read.schema(_ATTEMPT_LOG_SCHEMA)
+            .parquet(batch_dir)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col("ok")).alias("n_ok"),
+                # bounded by the number of FAILED events, not batch size:
+                # collect_list skips the NULL every other row yields
+                F.collect_list(
+                    F.when(failed_last, F.struct("event_id", "status", "error"))
+                ).alias("failed"),
+            )
+            .collect()[0]
+        )
         self.n_attempts += agg.n
         self.n_delivered += agg.n_ok
-        # bounded by the number of FAILED events, not batch size
-        failed_last = logged.filter(
-            (F.col("attempt") == cfg.attempt_budget - 1) & ~F.col("ok")
-        ).collect()
 
-        if failed_last:
+        if agg.failed:
             if cfg.cancel_on_failure:
                 # ST3 strict: fail the micro-batch -> stream halts,
                 # checkpoint replays (transaction-abort analog)
-                failed_ids = sorted(r.event_id for r in failed_last)
+                failed_ids = sorted(r.event_id for r in agg.failed)
                 raise RuntimeError(
                     f"webhook delivery failed for {len(failed_ids)} event(s) "
                     f"after {cfg.attempt_budget} attempts: {failed_ids[:3]}..."
                 )
             self.dead_letters.extend(
                 (r.event_id, f"status={r.status} err={r.error}")
-                for r in failed_last
+                for r in agg.failed
             )

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import datetime
 import glob
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,7 +47,9 @@ from pyspark.sql.types import (
 
 from ..config import SubscriptionConfig
 from ..functions.scalar import backoff_delay
-from .deliver import deliver_rows_per_event
+from .deliver import deliver_rows_per_event, delivery_lanes
+
+_log = logging.getLogger(__name__)
 
 _EVENT_LOG_SCHEMA = StructType(
     [
@@ -471,11 +474,18 @@ class EventQueue:
             ),
         ).select("event_id", "payload", "attempt_count", "timeout", "webhook_url")
 
+        # the ordered limit leaves ONE partition: its task delivers the
+        # events on every core's worth of lanes, keyed on event_id (ASYNC
+        # makes no per-key order promise — README, divergences)
+        ready_rdd = ready.rdd
+        lanes = delivery_lanes(ready_rdd)
+
         def _attempt_partition(it):
             rows = list(it)
             results = deliver_rows_per_event(
                 [
                     (
+                        r.event_id,
                         r.event_id,
                         r.payload,
                         url_override or r.webhook_url or fallback_url,
@@ -485,6 +495,7 @@ class EventQueue:
                 ],
                 headers,
                 attempt_budget=1,  # one attempt per poll cycle per event
+                lanes=lanes,
             )
             counts = {r.event_id: r.attempt_count for r in rows}
             for a in results:
@@ -508,7 +519,7 @@ class EventQueue:
         import shutil
         import tempfile
 
-        rdd = ready.rdd.mapPartitions(_attempt_partition)
+        rdd = ready_rdd.mapPartitions(_attempt_partition)
         os.makedirs(self.attempts_path, exist_ok=True)
         stage = tempfile.mkdtemp(
             prefix="attempts-stage-", dir=os.path.dirname(self.attempts_path)
@@ -567,8 +578,10 @@ class EventQueue:
                 if resolver is not None:
                     tick_url, tick_headers = resolver()
                 self.poll_once(cfg, tick_url, tick_headers)
-            except Exception as exc:  # pragma: no cover - defensive
-                print(f"cdc poller cycle failed (will retry): {exc}")
+            except Exception:
+                _log.exception(
+                    "cdc poller cycle failed for %s (will retry)", cfg.name
+                )
 
         return (
             self.spark.readStream.format("rate")

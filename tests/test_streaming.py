@@ -347,8 +347,10 @@ def test_async_failed_after_budget(spark, tmp_path):
 def test_per_key_delivery_order(spark, tmp_path):
     """Changes to the same row arrive in capture (seq) order even when
     the feed is shuffled across partitions — Postgres fires triggers in
-    statement order; the sink restores it per key (SURVEY.md §7)."""
-    with CaptureServer() as srv:
+    statement order; the sink restores it per key (SURVEY.md §7). The
+    receiver holds each POST for 50 ms, so the delivery lanes really
+    overlap (in-flight peak above 1) while the order is checked."""
+    with CaptureServer(response_delay=0.05) as srv:
         engine = CdcEngine(spark, str(tmp_path / "wd"))
         cfg = engine.register(
             SubscriptionConfig(
@@ -379,6 +381,7 @@ def test_per_key_delivery_order(spark, tmp_path):
         _run(engine, cfg, changes, tmp_path, "ord")
         got = srv.wait_for(15)
 
+    assert srv.max_inflight > 1, "keys were not delivered concurrently"
     by_key: dict[str, list[int]] = {}
     for p in got:
         new = json.loads(p["event"]["data"]["new"])
@@ -386,6 +389,71 @@ def test_per_key_delivery_order(spark, tmp_path):
     assert set(by_key) == {"1", "2", "3"}
     for k, salaries in by_key.items():
         assert salaries == sorted(salaries), f"key {k} out of order: {salaries}"
+
+
+def test_poll_once_delivers_keys_concurrently(spark, tmp_path):
+    """One poll tick over several ready events delivers them on
+    concurrent lanes (in-flight peak above 1 against a 50 ms receiver),
+    one attempt each, all DELIVERED."""
+    engine = CdcEngine(spark, str(tmp_path / "wd"))
+    with CaptureServer(response_delay=0.05) as srv:
+        cfg = engine.register(
+            SubscriptionConfig(
+                name="lanes_q", table_name="employees", webhook_url=srv.url,
+                mode="ASYNC",
+            )
+        )
+        changes = _feed(
+            spark, tmp_path / "feed",
+            [_change(i, "INSERT", new=_row(i, "A", i)) for i in range(1, 9)],
+        )
+        _run(engine, cfg, changes, tmp_path, "lanes")
+        assert engine.queue.poll_once(cfg) == 8
+        srv.wait_for(8)
+    assert srv.max_inflight > 1, "poll tick delivered serially"
+    st = engine.queue.state().collect()
+    assert [r.status for r in st] == ["DELIVERED"] * 8
+    assert {r.attempt_count for r in st} == {1}
+
+
+def test_poller_logs_failed_tick_and_retries(spark, tmp_path, caplog):
+    """A tick that raises is logged with its traceback (not printed) and
+    the worker survives: the next heartbeat delivers the event."""
+    import logging
+
+    engine = CdcEngine(spark, str(tmp_path / "wd"))
+    with CaptureServer() as srv:
+        cfg = engine.register(
+            SubscriptionConfig(
+                name="flaky_t", table_name="employees", webhook_url=srv.url,
+                mode="ASYNC", retry_number=0,
+            )
+        )
+        changes = _feed(
+            spark, tmp_path / "feed", [_change(1, "INSERT", new=_row(1, "A", 1))]
+        )
+        _run(engine, cfg, changes, tmp_path, "flaky")
+        calls = []
+
+        def resolver():
+            calls.append(1)
+            if len(calls) == 1:
+                raise RuntimeError("credential store unavailable")
+            return srv.url, {}
+
+        caplog.set_level(logging.ERROR, logger="postgres_cdc_plugin_spark")
+        worker = engine.queue.start_poller(cfg, resolver=resolver)
+        try:
+            srv.wait_for(1, timeout=30)
+        finally:
+            worker.stop()
+    failed = [
+        r for r in caplog.records
+        if r.name == "postgres_cdc_plugin_spark.streaming.queue"
+    ]
+    assert failed and "flaky_t" in failed[0].getMessage()
+    assert "credential store unavailable" in (failed[0].exc_text or "")
+    assert len(calls) >= 2
 
 
 def test_continuous_poller_cadence(spark, tmp_path):
@@ -752,6 +820,120 @@ def test_post_preserves_query_string():
         status, err, _body, _ = post_once(srv.url + "?token=abc", "{}", {}, 5)
         assert status == 200, err
         assert srv.paths_seen == ["/webhook/?token=abc"]
+
+
+def _blackhole():
+    """A listening socket that never accepts: connects succeed (kernel
+    backlog) and every request then waits out its timeout."""
+    import socket
+
+    sock = socket.socket()
+    sock.bind(("127.0.0.1", 0))
+    sock.listen(8)
+    return sock, f"http://127.0.0.1:{sock.getsockname()[1]}/hook"
+
+
+def test_deliver_rows_per_event_keeps_key_order_on_lanes():
+    """Keys interleaved in the input: rows of one key arrive in input
+    order while the lanes overlap (in-flight peak above 1); attempts come
+    back grouped by key in first-appearance order."""
+    from postgres_cdc_plugin_spark.streaming.deliver import deliver_rows_per_event
+
+    keys = ["a", "b", "c", "d"]
+    with CaptureServer(response_delay=0.02) as srv:
+        rows = [
+            (k, f"{k}{i}", json.dumps({"key": k, "i": i}), srv.url, 5)
+            for i in range(5)
+            for k in keys
+        ]
+        attempts = deliver_rows_per_event(rows, {}, attempt_budget=2, lanes=3)
+        got = srv.wait_for(20)
+    assert srv.max_inflight > 1
+    for k in keys:
+        assert [p["i"] for p in got if p["key"] == k] == list(range(5))
+    assert [a.event_id for a in attempts] == [f"{k}{i}" for k in keys for i in range(5)]
+    assert all(a.ok and a.attempt == 0 for a in attempts)
+
+
+def test_deliver_rows_per_event_spends_attempt_budget():
+    """Every row still gets attempt_budget immediate tries when each
+    lane's endpoint keeps failing."""
+    from postgres_cdc_plugin_spark.streaming.deliver import deliver_rows_per_event
+
+    with CaptureServer(fail_status=500) as srv:
+        rows = [(k, f"e{k}", "{}", srv.url, 5) for k in range(4)]
+        attempts = deliver_rows_per_event(rows, {}, attempt_budget=3, lanes=4)
+        srv.wait_for(12)
+    by_event: dict[str, list[int]] = {}
+    for a in attempts:
+        assert a.status == 500 and not a.ok
+        by_event.setdefault(a.event_id, []).append(a.attempt)
+    assert by_event == {f"e{k}": [0, 1, 2] for k in range(4)}
+
+
+def test_deliver_rows_per_event_closes_lane_connections(monkeypatch):
+    """Each lane pools one connection per destination and closes it when
+    the call returns, so no keep-alive socket outlives the batch and
+    holds one of a capped receiver's connection slots."""
+    from postgres_cdc_plugin_spark.streaming import deliver
+
+    made = []
+
+    class FakeConn:
+        closed = False
+
+        def close(self):
+            self.closed = True
+
+    def fake_post(url, payload, headers, timeout, conn=None):
+        if conn is None:
+            conn = FakeConn()
+            made.append(conn)
+        return 200, None, "{}", conn
+
+    monkeypatch.setattr(deliver, "post_once", fake_post)
+    rows = [(k, f"e{k}-{i}", "{}", "http://h/", 5) for k in range(6) for i in range(2)]
+    attempts = deliver.deliver_rows_per_event(rows, {}, attempt_budget=1, lanes=3)
+    assert len(attempts) == 12 and all(a.ok for a in attempts)
+    assert 1 <= len(made) <= 3
+    assert all(c.closed for c in made)
+
+
+def test_deliver_rows_per_event_dead_lane_does_not_block_other_keys():
+    """A lane stuck on an endpoint that never answers holds up only its
+    own key: the other keys are all delivered, in order, while it waits
+    out its timeouts, and the dead key still spends its full budget."""
+    import threading
+
+    from postgres_cdc_plugin_spark.streaming.deliver import deliver_rows_per_event
+
+    dead, dead_url = _blackhole()
+    try:
+        with CaptureServer() as srv:
+            rows = [("dead", "dead0", "{}", dead_url, 1)] + [
+                (k, f"{k}{i}", json.dumps({"key": k, "i": i}), srv.url, 5)
+                for i in range(3)
+                for k in ("x", "y")
+            ]
+            out = []
+            t = threading.Thread(
+                target=lambda: out.extend(
+                    deliver_rows_per_event(rows, {}, attempt_budget=2, lanes=2)
+                )
+            )
+            t.start()
+            got = srv.wait_for(6, timeout=10)
+            assert t.is_alive(), "live keys waited for the dead lane"
+            t.join(timeout=10)
+            assert not t.is_alive()
+    finally:
+        dead.close()
+    for k in ("x", "y"):
+        assert [p["i"] for p in got if p["key"] == k] == [0, 1, 2]
+    dead_attempts = [a for a in out if a.event_id == "dead0"]
+    assert [a.attempt for a in dead_attempts] == [0, 1]
+    assert all(a.status == -1 and "timed out" in a.error for a in dead_attempts)
+    assert sum(a.ok for a in out) == 6
 
 
 def test_async_queue_pollers_are_subscription_scoped(spark, tmp_path):

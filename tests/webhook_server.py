@@ -1,7 +1,9 @@
 """In-process webhook capture server for sink tests — the stdlib analog
 of the reference's FastAPI WebhookServer (tests/utilities.py:60-79):
 records every POST body, optional response delay (to force timeouts) and
-forced failure statuses (to drive the retry path)."""
+forced failure statuses (to drive the retry path). `max_inflight` is the
+peak number of POSTs the server was handling at once (concurrent
+delivery lanes show as a peak above 1)."""
 
 from __future__ import annotations
 
@@ -18,6 +20,8 @@ class CaptureServer:
         self.paths_seen: list[str] = []
         self.response_delay = response_delay
         self.fail_status = fail_status
+        self.inflight = 0
+        self.max_inflight = 0
         self._lock = threading.Lock()
         outer = self
 
@@ -25,9 +29,13 @@ class CaptureServer:
             def do_POST(self) -> None:  # noqa: N802
                 length = int(self.headers.get("Content-Length", 0))
                 body = self.rfile.read(length)
+                with outer._lock:
+                    outer.inflight += 1
+                    outer.max_inflight = max(outer.max_inflight, outer.inflight)
                 if outer.response_delay:
                     time.sleep(outer.response_delay)
                 with outer._lock:
+                    outer.inflight -= 1
                     outer.received.append(json.loads(body))
                     outer.headers_seen.append(dict(self.headers))
                     outer.paths_seen.append(self.path)
