@@ -60,7 +60,8 @@ class CredentialStore:
     def upsert(self, cfg: SubscriptionConfig, created_by: str = "engine") -> None:
         """Append-as-upsert (ON CONFLICT DO UPDATE analog,
         cdc_webhook--1.0.sql:188-197): newest updated_at wins at read."""
-        now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+        # aware UTC: PySpark reads a naive datetime as local time
+        now = datetime.datetime.now(datetime.timezone.utc)
         row = [
             (
                 cfg.schema_name,

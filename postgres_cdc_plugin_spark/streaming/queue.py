@@ -15,9 +15,23 @@ IN_PROGRESS existing only inside a poll cycle) is a *derived view*:
 status and next_attempt are computed by joining the two logs — attempts
 aggregate per event, backoff delay from the retry config snapshot
 (ST5: LINEAR const / EXPONENTIAL ivl*2^n, src/cdc_webhook.c:103-109).
-Append-only logs + derived state = no read-modify-write races, safe
-checkpoint replay, and parquet-friendly at any scale (partition by
-status date in production).
+Append-only logs + derived state = no read-modify-write races and safe
+checkpoint replay; compact() moves terminal events out of the logs.
+
+The poller does not re-derive that view every tick. Per subscription
+scope it carries a working set between ticks — one small tuple per
+PENDING event (next_attempt, attempt count, retry config, source file;
+never the payload) — the analog of the reference's
+(status, next_attempt) index (cdc_webhook--1.0.sql:50-52). A tick folds
+in only the event files that appeared since the last one, applies its
+own attempt outcomes, and reads payloads only for the events it
+delivers. queue_state_fold stays the one definition of queue state: it
+seeds the working set, and re-seeds it whenever the logs changed in a
+way the poller did not cause (see EventQueue._sync_working_set).
+
+Timestamps are UTC instants: enqueued_at is written from an aware UTC
+datetime, and a naive `now` passed to ready()/poll_once means UTC, so
+the queue clock does not depend on the driver's local timezone.
 
 Retries never sleep anywhere (the reference sleeps its backend,
 src/cdc_webhook.c:190): a failed attempt simply moves next_attempt into
@@ -27,10 +41,14 @@ picks the event up when it is ready.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import glob
+import heapq
 import logging
 import os
+import threading
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,7 +102,41 @@ _ATTEMPTS_SCHEMA = StructType(
 
 
 def _utcnow() -> datetime.datetime:
-    return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    # aware on purpose: PySpark reads a NAIVE datetime as the driver's
+    # local time, which would shift every instant by the UTC offset
+    return datetime.datetime.now(datetime.timezone.utc)
+
+
+def _as_utc(now: datetime.datetime | None) -> datetime.datetime:
+    """`now` as an aware UTC datetime: None is the current time, and a
+    naive value means UTC (never the driver's local time)."""
+    if now is None:
+        return _utcnow()
+    if now.tzinfo is None:
+        return now.replace(tzinfo=datetime.timezone.utc)
+    return now
+
+
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+
+
+def _epoch_micros(now: datetime.datetime | None) -> int:
+    return (_as_utc(now) - _EPOCH) // datetime.timedelta(microseconds=1)
+
+
+def _backoff_seconds(backoff: str, interval: int, n: int) -> int:
+    """functions.scalar.backoff_delay in Python: LINEAR => interval,
+    otherwise interval * 2^n (the fold's rule, src/cdc_webhook.c:103-109)."""
+    return interval if backoff == "LINEAR" else interval * int(2.0**n)
+
+
+def _local_path(uri: str) -> str:
+    # Spark reports `_metadata.file_path` as a URL-encoded URI; hand a
+    # local file back as the plain path the log globs produce
+    parsed = urllib.parse.urlparse(uri)
+    if parsed.scheme == "file":
+        return urllib.parse.unquote(parsed.path)
+    return uri
 
 
 def queue_state_fold(events: DataFrame, attempts: DataFrame) -> DataFrame:
@@ -97,7 +149,9 @@ def queue_state_fold(events: DataFrame, attempts: DataFrame) -> DataFrame:
     append-only logs, and the batch `queue_state_machine` query
     (operators/cdc.py) applies it to a deterministic fixture with a
     DuckDB oracle, so the driver's hash check exercises the very fold
-    the streaming poller runs (not a parallel reimplementation).
+    the streaming poller seeds its working set from (its per-tick
+    updates apply the same status and backoff rules in Python, pinned
+    to this fold by tests/test_streaming.py).
 
     Backoff: delay after n completed attempts = interval (LINEAR) or
     interval * 2^(n-1) (EXPONENTIAL, 0-based shift of the last attempt
@@ -169,11 +223,40 @@ def queue_state_fold(events: DataFrame, attempts: DataFrame) -> DataFrame:
     )
 
 
+@dataclasses.dataclass(slots=True)
+class _Pending:
+    """One PENDING event of a poller's working set (never the payload)."""
+
+    next_attempt: int | None  # epoch microseconds, exactly as the fold
+    attempt_count: int
+    last_attempt_at: float | None  # epoch seconds of the latest attempt
+    retry_number: int
+    retry_interval: int
+    retry_backoff: str
+    source: str  # an event-log file holding the event's row
+
+
+@dataclasses.dataclass(slots=True)
+class _WorkingSet:
+    """One poller scope's PENDING events as of the log files read."""
+
+    pending: dict[str, _Pending]
+    event_files: set[str]
+    attempt_files: set[str]
+
+
 class EventQueue:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.event_log_path = os.path.join(path, "event_log")
         self.attempts_path = os.path.join(path, "attempts")
+        # poller working sets by (schema, table, name) scope, the event
+        # log dirs each scope has read, and every attempts file this
+        # queue moved into the log (any scope's)
+        self._working: dict[tuple[str, str, str], _WorkingSet] = {}
+        self._read_dirs: dict[tuple[str, str, str], set[str]] = {}
+        self._written: set[str] = set()
+        self._written_lock = threading.Lock()
 
     # ---- S3: the enqueue sink --------------------------------------
 
@@ -246,9 +329,10 @@ class EventQueue:
             + glob.glob(os.path.join(glob.escape(path), "batch=*", "*.parquet"))
         )
 
-    def _recover_crashed_swap(self, path: str) -> None:
+    def _recover_crashed_swap(self, path: str) -> bool:
         """Heal a compact() swap that died in flight (cheap no-op when
-        nothing is pending — two existence checks).
+        nothing is pending — two existence checks). Returns whether
+        `.old` was merged back into the live dir.
 
         Protocol: compact touches `<path>.swap` BEFORE moving the live
         dir to `<path>.old` and removes it only after the new dir is in
@@ -267,8 +351,9 @@ class EventQueue:
         old, marker = path + ".old", path + ".swap"
         has_old, has_marker = os.path.exists(old), os.path.exists(marker)
         if not (has_old or has_marker):
-            return
-        if has_old and (has_marker or not os.path.exists(path)):
+            return False
+        merged = has_old and (has_marker or not os.path.exists(path))
+        if merged:
             os.makedirs(path, exist_ok=True)
             for entry in os.listdir(old):
                 dst = os.path.join(path, entry)
@@ -278,6 +363,10 @@ class EventQueue:
             self.spark.catalog.refreshByPath(path)
         if has_marker:
             os.remove(marker)
+        return merged
+
+    def _scan(self, files, schema) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(*files)
 
     def _read_log(self, path: str, schema) -> DataFrame:
         # with an explicit schema the parquet read is fully lazy, so a
@@ -287,7 +376,7 @@ class EventQueue:
         files = self._log_files(path)
         if not files:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
+        return self._scan(files, schema)
 
     def _events(self) -> DataFrame:
         return self._read_log(self.event_log_path, _EVENT_LOG_SCHEMA)
@@ -306,8 +395,8 @@ class EventQueue:
     def compact(self, drop_failed: bool = False) -> dict[str, int]:
         """Maintenance: rewrite the append-only logs without terminal
         events. DELIVERED events (and, with drop_failed, FAILED ones)
-        plus their attempt rows move out of the live logs, so the
-        per-poll state view scans only the working set — the analog of
+        plus their attempt rows move out of the live logs, so state()
+        and a poller's re-seed scan only the live events — the analog of
         purging rows the reference's event_log would otherwise
         accumulate forever (its schema has no retention either,
         cdc_webhook--1.0.sql:25-47). FAILED events are kept by default
@@ -422,10 +511,11 @@ class EventQueue:
         `scope` (optional Column predicate) narrows the poll BEFORE the
         ordered limit — a scoped poller that filtered AFTER the global
         top-k could be starved forever by another subscription's
-        backlog filling the window."""
-        now = now or _utcnow()
+        backlog filling the window. `now` defaults to the current time;
+        a naive `now` means UTC."""
         st = self.state().filter(
-            (F.col("status") == "PENDING") & (F.col("next_attempt") <= F.lit(now))
+            (F.col("status") == "PENDING")
+            & (F.col("next_attempt") <= F.lit(_as_utc(now)))
         )
         if scope is not None:
             st = st.filter(scope)
@@ -438,9 +528,10 @@ class EventQueue:
         headers: dict[str, str] | None = None,
         now: datetime.datetime | None = None,
     ) -> int:
-        """One worker cycle: scan ready events, attempt delivery once
+        """One worker cycle: pick the ready events, attempt delivery once
         each (scheduled retries happen on later cycles via next_attempt —
         never by sleeping), append attempt rows. Returns #events tried.
+        `now` defaults to the current time; a naive `now` means UTC.
 
         This is the loop body the reference left as a comment
         (src/cdc_webhook_worker.c:55-61).
@@ -457,31 +548,185 @@ class EventQueue:
         versions in flight keep their enqueue-time destination; the
         `url` argument, when given, overrides the destination for this
         subscription's events (credential rotation, tests).
+
+        Incremental: the tick brings the scope's working set up to date
+        (_sync_working_set), picks the ready events from it with ready()'s
+        rule — next_attempt <= now, ordered by (next_attempt, event_id),
+        first 1000 — and returns 0 when none is ready (a tick that also
+        found no new file starts no Spark job). Otherwise it reads only
+        the files holding the ready events and, once every attempt row
+        is in the log, applies the outcomes to the working set with the
+        fold's status and backoff rules. A tick that raises drops the
+        working set; the next one re-seeds.
         """
-        url_override = url
+        key = (cfg.schema_name, cfg.table_name, cfg.name)
+        scope = (
+            (F.col("trigger_schema") == cfg.schema_name)
+            & (F.col("trigger_table") == cfg.table_name)
+            & (F.col("trigger_name") == cfg.name)
+        )
+        ws = self._sync_working_set(self._working.pop(key, None), key, scope)
+        now_us = _epoch_micros(now)
+        ready = heapq.nsmallest(
+            1000,
+            (
+                (p.next_attempt, eid)
+                for eid, p in ws.pending.items()
+                if p.next_attempt is not None and p.next_attempt <= now_us
+            ),
+        )
+        n = self._deliver(ws, [eid for _, eid in ready], scope, cfg, url, headers)
+        self._working[key] = ws
+        return n
+
+    def _sync_working_set(
+        self, ws: _WorkingSet | None, key: tuple[str, str, str], scope
+    ) -> _WorkingSet:
+        """Bring a scope's working set up to the current log files.
+
+        Cheap start: heal a crashed compact swap and glob both logs.
+        Only the new `batch=` files are read when each sits in a batch
+        dir the scope has never read — a streaming batch dir carries
+        events new to the log — and each unseen event joins as PENDING
+        with no attempts. Anything else re-seeds with the full
+        queue_state_fold: no working set yet, a crash-recovery merge, a
+        file read before is gone (an enqueue replay overwrote its
+        `batch=` dir, or compact() ran), a new file in a dir read before
+        (the rewrite of a replay whose delete a tick saw, or the rest of
+        a batch whose commit a glob caught midway), a new FLAT event-log
+        file (a direct enqueue_batch append may repeat an event that is
+        already terminal), or an attempts file this queue did not write.
+        The dirs read are kept across re-seeds for that reason; a first
+        seed that lands inside a replay's delete-then-write window can
+        still take the rewritten events for new ones, which costs at most
+        a repeated POST (at-least-once)."""
+        merged = [
+            self._recover_crashed_swap(p)
+            for p in (self.event_log_path, self.attempts_path)
+        ]
+        event_files = set(self._log_files(self.event_log_path))
+        attempt_files = set(self._log_files(self.attempts_path))
+        read_dirs = self._read_dirs.setdefault(key, set())
+        if ws is not None and not any(merged):
+            new_events = event_files - ws.event_files
+            new_dirs = {os.path.dirname(f) for f in new_events}
+            with self._written_lock:
+                foreign = attempt_files - ws.attempt_files - self._written
+            if not (
+                foreign
+                or not ws.event_files <= event_files
+                or not ws.attempt_files <= attempt_files
+                or self.event_log_path in new_dirs
+                or new_dirs & read_dirs
+            ):
+                if new_events:
+                    self._add_new_events(ws, sorted(new_events), scope)
+                read_dirs.update(new_dirs)
+                ws.event_files, ws.attempt_files = event_files, attempt_files
+                return ws
+        read_dirs.update(os.path.dirname(f) for f in event_files)
+        return self._seed(event_files, attempt_files, scope)
+
+    def _add_new_events(self, ws: _WorkingSet, files: list[str], scope) -> None:
+        rows = (
+            self._scan(files, _EVENT_LOG_SCHEMA)
+            .filter(scope)
+            .select(
+                "event_id",
+                F.unix_micros("enqueued_at").alias("next_attempt"),
+                "retry_number",
+                "retry_interval",
+                "retry_backoff",
+                F.col("_metadata.file_path").alias("source"),
+            )
+            .collect()
+        )
+        for r in rows:
+            if r.event_id not in ws.pending:
+                ws.pending[r.event_id] = _Pending(
+                    r.next_attempt, 0, None, r.retry_number,
+                    r.retry_interval, r.retry_backoff, _local_path(r.source),
+                )
+
+    def _seed(
+        self, event_files: set[str], attempt_files: set[str], scope
+    ) -> _WorkingSet:
+        """The scope's PENDING events from the full fold over the given
+        files, each with a file that holds its row."""
+        ws = _WorkingSet({}, event_files, attempt_files)
+        if not event_files:
+            return ws
+        events = self._scan(sorted(event_files), _EVENT_LOG_SCHEMA)
+        attempts = (
+            self._scan(sorted(attempt_files), _ATTEMPTS_SCHEMA)
+            if attempt_files
+            else self.spark.createDataFrame([], _ATTEMPTS_SCHEMA)
+        )
+        sources = events.filter(scope).select(
+            "event_id", F.col("_metadata.file_path").alias("source")
+        )
+        rows = (
+            queue_state_fold(events, attempts)
+            .filter((F.col("status") == "PENDING") & scope)
+            .join(sources, "event_id")
+            .select(
+                "event_id",
+                F.unix_micros("next_attempt").alias("next_attempt"),
+                "attempt_count",
+                F.array_max("attempts.attempted_at").alias("last_attempt_at"),
+                "retry_number",
+                "retry_interval",
+                "retry_backoff",
+                "source",
+            )
+            .collect()
+        )
+        for r in rows:
+            # an event held by several files joins once per copy; any
+            # copy serves (delivery drops duplicates by event_id)
+            ws.pending[r.event_id] = _Pending(
+                r.next_attempt, r.attempt_count, r.last_attempt_at,
+                r.retry_number, r.retry_interval, r.retry_backoff,
+                _local_path(r.source),
+            )
+        return ws
+
+    def _deliver(
+        self,
+        ws: _WorkingSet,
+        ids: list[str],
+        scope,
+        cfg: SubscriptionConfig,
+        url_override: str | None,
+        headers: dict[str, str] | None,
+    ) -> int:
+        """Attempt each ready event once and apply the outcomes to the
+        working set. Returns #events tried."""
+        if not ids:
+            return 0
         headers = dict(headers) if headers is not None else dict(cfg.headers)
         fallback_url = cfg.webhook_url
         fallback_timeout = cfg.timeout
-        # subscription scope goes INSIDE ready() so it applies before
-        # the ordered limit — filtering after the global top-k would
-        # let another subscription's >limit backlog starve this poller
-        ready = self.ready(
-            now,
-            scope=(
-                (F.col("trigger_schema") == cfg.schema_name)
-                & (F.col("trigger_table") == cfg.table_name)
-                & (F.col("trigger_name") == cfg.name)
-            ),
-        ).select("event_id", "payload", "attempt_count", "timeout", "webhook_url")
-
-        # the ordered limit leaves ONE partition: its task delivers the
-        # events on every core's worth of lanes, keyed on event_id (ASYNC
-        # makes no per-key order promise — README, divergences)
-        ready_rdd = ready.rdd
+        order = {eid: i for i, eid in enumerate(ids)}
+        counts = {eid: ws.pending[eid].attempt_count for eid in ids}
+        files = sorted({ws.pending[eid].source for eid in ids})
+        # one partition, no shuffle: its task delivers the events on
+        # every core's worth of lanes, keyed on event_id (ASYNC makes no
+        # per-key order promise — README, divergences)
+        ready_rdd = (
+            self._scan(files, _EVENT_LOG_SCHEMA)
+            .filter(scope & F.col("event_id").isin(ids))
+            .select("event_id", "payload", "timeout", "webhook_url")
+            .coalesce(1)
+            .rdd
+        )
         lanes = delivery_lanes(ready_rdd)
 
         def _attempt_partition(it):
-            rows = list(it)
+            copies: dict = {}
+            for r in it:
+                copies.setdefault(r.event_id, r)  # one copy per event
+            rows = sorted(copies.values(), key=lambda r: order[r.event_id])
             results = deliver_rows_per_event(
                 [
                     (
@@ -497,7 +742,6 @@ class EventQueue:
                 attempt_budget=1,  # one attempt per poll cycle per event
                 lanes=lanes,
             )
-            counts = {r.event_id: r.attempt_count for r in rows}
             for a in results:
                 yield (
                     a.event_id,
@@ -510,7 +754,7 @@ class EventQueue:
                 )
 
         # EXACTLY ONE Spark action runs over the delivery RDD: the
-        # parquet write to a staging dir. The cycle count then comes
+        # parquet write to a staging dir. The attempt outcomes then come
         # from reading the staged FILES back (round-2 review: a persist
         # + second action re-executes lost cached partitions on a real
         # cluster, re-POSTing webhooks), and the staged part-files move
@@ -532,21 +776,47 @@ class EventQueue:
             staged_files = glob.glob(
                 os.path.join(glob.escape(stage_data), "*.parquet")
             )
-            n = int(
+            results = (
                 self.spark.read.schema(_ATTEMPTS_SCHEMA)
                 .parquet(stage_data)
-                .count()
-            ) if staged_files else 0
-            if n:
-                for f in staged_files:
-                    os.rename(
-                        f,
-                        os.path.join(self.attempts_path, os.path.basename(f)),
-                    )
+                .select("event_id", "ok", "attempted_at")
+                .collect()
+                if staged_files
+                else []
+            )
+            if results:
+                moved = [
+                    os.path.join(self.attempts_path, os.path.basename(f))
+                    for f in staged_files
+                ]
+                # recorded BEFORE the renames, so another scope's tick
+                # never mistakes a file in flight for a foreign write
+                with self._written_lock:
+                    self._written.update(moved)
+                for f, dst in zip(staged_files, moved):
+                    os.rename(f, dst)
+                ws.attempt_files.update(moved)
                 self.spark.catalog.refreshByPath(self.attempts_path)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
-        return n
+        # every attempt row is in the log: apply the fold's rules
+        for eid, ok, at in results:
+            p = ws.pending.get(eid)
+            if p is None:
+                continue
+            p.attempt_count += 1
+            p.last_attempt_at = (
+                at if p.last_attempt_at is None else max(p.last_attempt_at, at)
+            )
+            if ok or p.attempt_count >= p.retry_number + 1:
+                del ws.pending[eid]  # DELIVERED or FAILED
+            else:
+                delay = _backoff_seconds(
+                    p.retry_backoff, p.retry_interval, p.attempt_count - 1
+                )
+                # timestamp_seconds(double): micros truncated toward zero
+                p.next_attempt = int((p.last_attempt_at + delay) * 1_000_000)
+        return len(results)
 
     def start_poller(
         self,

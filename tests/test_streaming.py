@@ -1587,6 +1587,347 @@ def test_queue_state_collapses_duplicate_event_and_attempt_rows(spark, tmp_path)
     assert len(st) == 1
     assert st[0].attempt_count == 1  # not 2: budget burned once
 
+
+def test_backoff_seconds_matches_backoff_delay(spark):
+    """The poller's Python backoff is the fold's Spark expression
+    (functions.scalar.backoff_delay) for both modes, n = 0..20."""
+    from postgres_cdc_plugin_spark.functions.scalar import backoff_delay
+    from postgres_cdc_plugin_spark.streaming.queue import _backoff_seconds
+
+    cases = [
+        (mode, ivl, n)
+        for mode in ("LINEAR", "EXPONENTIAL")
+        for ivl in (1, 7, 60)
+        for n in range(21)
+    ]
+    got = spark.createDataFrame(
+        cases, "retry_backoff string, retry_interval int, n int"
+    ).select(
+        "retry_backoff", "retry_interval", "n",
+        backoff_delay("retry_backoff", "retry_interval", "n").alias("d"),
+    ).collect()
+    assert len(got) == len(cases)
+    for r in got:
+        assert _backoff_seconds(r.retry_backoff, r.retry_interval, r.n) == r.d, r
+
+
+def _enqueue(spark, q, cfg, batch_id, *ids):
+    q.enqueue_batch(
+        spark.createDataFrame(
+            [((i,), "{}") for i in ids],
+            "envelope struct<id:string>, payload string",
+        ),
+        cfg,
+        batch_id,
+    )
+
+
+def _assert_working_set_is_fold(q, cfg):
+    """The poller's carried working set equals state() filtered to the
+    scope's PENDING events: same ids, attempt counts and next_attempt to
+    the microsecond."""
+    from pyspark.sql import functions as F
+
+    ws = q._working[(cfg.schema_name, cfg.table_name, cfg.name)]
+    got = {
+        eid: (p.attempt_count, p.next_attempt) for eid, p in ws.pending.items()
+    }
+    want = {
+        r.event_id: (r.attempt_count, r.next_us)
+        for r in q.state()
+        .filter(
+            (F.col("status") == "PENDING")
+            & (F.col("trigger_schema") == cfg.schema_name)
+            & (F.col("trigger_table") == cfg.table_name)
+            & (F.col("trigger_name") == cfg.name)
+        )
+        .select(
+            "event_id", "attempt_count",
+            F.unix_micros("next_attempt").alias("next_us"),
+        )
+        .collect()
+    }
+    assert got == want
+    return got
+
+
+def test_poll_working_set_tracks_the_fold(spark, tmp_path):
+    """The incremental poll tick's working set stays equal to the full
+    queue_state_fold across failing and successful delivery, backoff,
+    FAILED after the budget, a second subscription's poller, a replay
+    overwriting a read `batch=` dir (also with a tick between its delete
+    and its write), a foreign attempts file and a compact() between
+    ticks."""
+    import os
+    import shutil
+    import time
+
+    from postgres_cdc_plugin_spark.streaming.queue import (
+        _ATTEMPTS_SCHEMA,
+        EventQueue,
+    )
+
+    q = EventQueue(spark, str(tmp_path / "q"))
+    utc = datetime.timezone.utc
+
+    def later(s):
+        return datetime.datetime.now(utc) + datetime.timedelta(seconds=s)
+
+    cfg_a = SubscriptionConfig(
+        name="ws_a", table_name="employees", webhook_url="http://x/",
+        mode="ASYNC", retry_number=2, retry_interval=30,
+        retry_backoff="EXPONENTIAL",
+    )
+    # the same subscription at an older config version: its events keep
+    # their own retry config (one retry, LINEAR)
+    cfg_a_v1 = SubscriptionConfig(
+        name="ws_a", table_name="employees", webhook_url="http://x/",
+        mode="ASYNC", retry_number=1, retry_interval=30,
+    )
+    cfg_b = SubscriptionConfig(
+        name="ws_b", table_name="employees", webhook_url="http://x/",
+        mode="ASYNC",
+    )
+    key_a = ("public", "employees", "ws_a")
+    with CaptureServer(fail_status=500) as bad, CaptureServer() as good:
+        _enqueue(spark, q, cfg_a, 0, "ev-1")
+        _enqueue(spark, q, cfg_a_v1, 1, "ev-2")
+        # seed, both attempts fail
+        assert q.poll_once(cfg_a, url=bad.url) == 2
+        assert _assert_working_set_is_fold(q, cfg_a).keys() == {"ev-1", "ev-2"}
+        seeded = q._working[key_a]
+        # a new batch file: only ev-3 is ready, and it is delivered
+        _enqueue(spark, q, cfg_a, 2, "ev-3")
+        assert q.poll_once(cfg_a, url=good.url) == 1
+        assert _assert_working_set_is_fold(q, cfg_a).keys() == {"ev-1", "ev-2"}
+        # past the first backoff: both retry and fail; ev-2's budget of
+        # two attempts is spent (FAILED), ev-1 backs off 60 s
+        assert q.poll_once(cfg_a, url=bad.url, now=later(40)) == 2
+        assert _assert_working_set_is_fold(q, cfg_a).keys() == {"ev-1"}
+        assert q.poll_once(cfg_a, url=bad.url, now=later(40)) == 0
+        assert q.poll_once(cfg_a, url=good.url, now=later(120)) == 1
+        assert _assert_working_set_is_fold(q, cfg_a) == {}
+        assert q._working[key_a] is seeded  # never re-seeded so far
+
+        # a second subscription's poller on the same queue: its attempt
+        # file is this queue's own write and does not re-seed scope A
+        _enqueue(spark, q, cfg_b, 0, "ev-b1", "ev-b2")
+        _enqueue(spark, q, cfg_a, 3, "ev-4")
+        assert q.poll_once(cfg_b, url=bad.url) == 2
+        _assert_working_set_is_fold(q, cfg_b)
+        assert q.poll_once(cfg_a, url=bad.url) == 1
+        assert _assert_working_set_is_fold(q, cfg_a).keys() == {"ev-4"}
+        assert q._working[key_a] is seeded
+
+        # an enqueue replay overwrites batch 3, which the poller read
+        _enqueue(spark, q, cfg_a, 3, "ev-4")
+        assert q.poll_once(cfg_a, url=bad.url) == 0
+        assert q._working[key_a] is not seeded
+        assert _assert_working_set_is_fold(q, cfg_a)["ev-4"][0] == 1
+
+        # a tick between a replay's delete and its write: the rewritten
+        # batch is not taken for new events (ev-4 keeps its attempt)
+        (d,) = [e for e in os.listdir(q.event_log_path) if e.endswith("-3")]
+        shutil.rmtree(os.path.join(q.event_log_path, d))
+        assert q.poll_once(cfg_a, url=bad.url) == 0
+        assert _assert_working_set_is_fold(q, cfg_a) == {}
+        _enqueue(spark, q, cfg_a, 3, "ev-4")
+        assert q.poll_once(cfg_a, url=bad.url) == 0
+        assert _assert_working_set_is_fold(q, cfg_a)["ev-4"][0] == 1
+
+        # an attempts file written outside the queue
+        spark.createDataFrame(
+            [("ev-4", 1, 500, False, "boom", time.time(), None)],
+            _ATTEMPTS_SCHEMA,
+        ).write.mode("append").parquet(q.attempts_path)
+        assert q.poll_once(cfg_a, url=bad.url) == 0
+        assert _assert_working_set_is_fold(q, cfg_a)["ev-4"][0] == 2
+
+        # compact() between ticks rewrites both logs
+        assert q.compact() == {"kept": 4, "dropped": 2}
+        assert q.poll_once(cfg_a, url=good.url, now=later(200)) == 1
+        assert _assert_working_set_is_fold(q, cfg_a) == {}
+        assert q.poll_once(cfg_b, url=good.url, now=later(200)) == 2
+        assert _assert_working_set_is_fold(q, cfg_b) == {}
+
+
+def test_concurrent_scoped_pollers_keep_their_working_sets(spark, tmp_path):
+    """Pollers of several subscriptions share one EventQueue and tick at
+    once (more threads than cores, short switch interval): a tick never
+    mistakes another scope's attempts file for a foreign write, so no
+    working set is re-seeded after its first tick, and every attempt
+    lands exactly once in the fold."""
+    import sys
+    import threading
+
+    from postgres_cdc_plugin_spark.streaming.queue import EventQueue
+
+    q = EventQueue(spark, str(tmp_path / "q"))
+    cfgs = [
+        SubscriptionConfig(
+            name=f"cc{i}", table_name="employees", webhook_url="http://x/",
+            mode="ASYNC", retry_number=10, retry_interval=1,
+        )
+        for i in range(6)
+    ]
+    for i, cfg in enumerate(cfgs):
+        _enqueue(spark, q, cfg, 0, f"ev-{i}")
+    rounds, errors = 3, []
+    start = threading.Barrier(len(cfgs))
+
+    def poller(cfg, url):
+        try:
+            start.wait(timeout=60)
+            key = (cfg.schema_name, cfg.table_name, cfg.name)
+            first = None
+            for r in range(1, rounds + 1):
+                later = datetime.datetime.now(
+                    datetime.timezone.utc
+                ) + datetime.timedelta(seconds=10 * r)
+                assert q.poll_once(cfg, url=url, now=later) == 1
+                first = first or q._working[key]
+                assert q._working[key] is first, f"{cfg.name} re-seeded"
+        except Exception as e:  # reported on the test thread
+            errors.append(e)
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with CaptureServer(fail_status=500) as bad:
+            threads = [
+                threading.Thread(target=poller, args=(c, bad.url)) for c in cfgs
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(saved)
+    assert errors == []
+    for i, cfg in enumerate(cfgs):
+        ws = _assert_working_set_is_fold(q, cfg)
+        assert list(ws) == [f"ev-{i}"] and ws[f"ev-{i}"][0] == rounds
+
+
+def test_idle_poll_tick_starts_no_spark_job(spark, tmp_path):
+    """ROADMAP item 2: an idle tick costs less than the cadence. After
+    a first tick, a tick with no new log files and nothing ready returns
+    0 without a Spark job; a tick that finds one new `batch=` file scans
+    only that file and the files holding the ready events."""
+    import os
+
+    from postgres_cdc_plugin_spark.streaming.queue import EventQueue
+
+    sc = spark.sparkContext
+    q = EventQueue(spark, str(tmp_path / "q"))
+    cfg = SubscriptionConfig(
+        name="idle", table_name="employees", webhook_url="http://x/",
+        mode="ASYNC", retry_interval=60,
+    )
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    scanned: list[set[str]] = []
+    scan = q._scan
+
+    def recording_scan(files, schema):
+        df = scan(files, schema)
+        scanned.append({os.path.basename(f) for f in df.inputFiles()})
+        return df
+
+    def batch_files(batch_id):
+        d = [
+            e for e in os.listdir(q.event_log_path)
+            if e.endswith(f"-{batch_id}")
+        ]
+        (d,) = d
+        return {
+            f for f in os.listdir(os.path.join(q.event_log_path, d))
+            if f.endswith(".parquet")
+        }
+
+    with CaptureServer(fail_status=500) as bad, CaptureServer() as good:
+        _enqueue(spark, q, cfg, 0, "ev-1", "ev-2")
+        assert q.poll_once(cfg, url=bad.url) == 2  # seeds; both back off
+
+        n, jobs = jobs_of("idle-tick", lambda: q.poll_once(cfg, url=bad.url))
+        assert (n, jobs) == (0, [])
+
+        _enqueue(spark, q, cfg, 1, "ev-3")
+        q._scan = recording_scan
+        n, jobs = jobs_of("new-file-tick", lambda: q.poll_once(cfg, url=good.url))
+        assert n == 1 and jobs  # the job check does see a busy tick
+        # the new-file scan reads batch 1; the delivery read, ev-3's file
+        assert len(scanned) == 2 and scanned[0] == batch_files(1)
+        assert scanned[1] and scanned[1] <= batch_files(1)
+
+        scanned.clear()
+        later = datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(
+            seconds=120
+        )
+        assert q.poll_once(cfg, url=good.url, now=later) == 2
+        # no new files: only the delivery read, of batch 0's files
+        assert len(scanned) == 1 and scanned[0] and scanned[0] <= batch_files(0)
+
+
+def test_queue_clock_is_utc_under_local_driver_timezone(spark, tmp_path):
+    """A driver in a timezone other than UTC: enqueued_at, the poll clock
+    and credential upserts stay UTC instants — a retry scheduled 60 s
+    out is not re-attempted by the very next poll."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    from postgres_cdc_plugin_spark.streaming.credstore import CredentialStore
+    from postgres_cdc_plugin_spark.streaming.queue import EventQueue
+
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        q = EventQueue(spark, str(tmp_path / "q"))
+        cfg = SubscriptionConfig(
+            name="tz", table_name="employees", webhook_url="http://x/",
+            mode="ASYNC", retry_number=3, retry_interval=60,
+        )
+        _enqueue(spark, q, cfg, 0, "ev-1")
+        with CaptureServer(fail_status=500) as bad:
+            assert q.poll_once(cfg, url=bad.url) == 1
+            assert q.poll_once(cfg, url=bad.url) == 0
+        assert q.ready().count() == 0
+        (r,) = q.state().select(
+            "attempt_count",
+            (F.unix_micros("enqueued_at") / 1e6).alias("enq"),
+            (F.unix_micros("next_attempt") / 1e6).alias("nxt"),
+        ).collect()
+        now = time.time()
+        assert r.attempt_count == 1
+        assert now - 120 < r.enq <= now
+        assert 30 < r.nxt - now <= 61
+
+        creds = CredentialStore(spark, str(tmp_path / "creds"))
+        creds.upsert(cfg)
+        (c,) = creds.current().select(
+            (F.unix_micros("updated_at") / 1e6).alias("at")
+        ).collect()
+        assert now - 120 < c.at <= time.time()
+    finally:
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+
+
 def test_streaming_ivf_index_matches_batch_assign(spark, tmp_path, sf_dir):
     """EmbedIvfIndex: the streaming per-batch assignment against a
     frozen codebook equals the batch embed_ivf_assign bit-for-bit
