@@ -1,4 +1,5 @@
-"""HTTP webhook delivery sink (S2/ST1/ST3/ST7).
+"""HTTP webhook delivery sink (S2/ST1/ST3/ST7) and the deliver-and-log
+step it shares with the async queue's poller.
 
 The reference's C sink (src/cdc_webhook.c:121-237) posts one payload per
 row with libcurl, re-initializing curl per call (:175,220) and sleeping
@@ -29,20 +30,46 @@ the backend between retries (:190). This sink:
     False records the failure to a dead-letter list and continues
     (WARNING path, :229-233).
 
+Deliver-and-log (`deliver_and_log`): POSTing a partition's rows and
+recording their attempts is one Spark task, and delivering a batch is
+one Spark action. Each task writes its attempt rows with pyarrow to one
+parquet file in a hidden stage dir and returns a small summary; the
+driver collects the summaries and commits by renaming exactly the files
+they name (the successful task attempts' files, the rule Spark's file
+committer applies), then removes the stage dir. Counters and the
+failure subset come from the summaries, so nothing is read back, and no
+second action can re-run a delivery task (re-POSTing webhooks). Log
+dirs must therefore sit on a filesystem every executor mounts at the
+same path.
+
 HTTP success = status in [200, 300) (src/cdc_webhook.c:137-140).
 """
 
 from __future__ import annotations
 
 import concurrent.futures
+import glob
 import http.client
+import os
 import queue
+import shutil
 import time
 import urllib.parse
+import uuid
 from dataclasses import dataclass
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..config import SubscriptionConfig
 
@@ -204,9 +231,81 @@ def deliver_rows_per_event(
     return [a for group in results for a in group]
 
 
-_ATTEMPT_LOG_SCHEMA = (
-    "event_id string, attempt int, status int, ok boolean, error string, "
-    "at double, response string"
+_STAGE_PREFIX = "_stage-"
+
+
+def stage_dirs(log_dir: str) -> list[str]:
+    """The deliver-and-log stage dirs under a log dir. Hidden names: the
+    log globs, WebhookSink.attempts and Spark's parquet reader skip
+    them."""
+    return glob.glob(os.path.join(glob.escape(log_dir), _STAGE_PREFIX + "*"))
+
+
+def deliver_and_log(
+    rdd, deliver, schema: StructType, log_dir: str, summarize, commit
+) -> list:
+    """Deliver every partition of `rdd` and log its attempts, as ONE
+    Spark action.
+
+    Each task runs `deliver` (a partition iterator -> attempt-row tuples
+    in `schema`'s column order), writes the rows with pyarrow to one
+    parquet file named per task attempt in a hidden stage dir under
+    `log_dir` (temp name, then rename), and yields (file or None for an
+    empty partition, summarize(rows)). The driver collects those, then
+    calls commit(files) with exactly the files the collected summaries
+    name — a failed or duplicate task attempt's file is never
+    committed. `commit` moves them into the log by rename (same
+    filesystem). The stage dir is removed whatever happens. Returns the
+    summaries, one per partition."""
+    arrow_schema = to_arrow_schema(schema)
+    run = uuid.uuid4().hex
+    stage = os.path.join(log_dir, f"{_STAGE_PREFIX}{run}")
+    os.makedirs(stage)
+
+    def _task(it):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rows = list(deliver(it))
+        path = None
+        if rows:
+            ctx = TaskContext.get()
+            # run id last: task attempt ids restart with each application,
+            # and committed files share one log dir across applications
+            name = (
+                f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}-{run}"
+                ".parquet"
+            )
+            path = os.path.join(stage, name)
+            tmp = os.path.join(stage, f".{name}.tmp")
+            columns = [
+                pa.array(col, type=field.type)
+                for col, field in zip(zip(*rows), arrow_schema)
+            ]
+            pq.write_table(
+                pa.Table.from_arrays(columns, schema=arrow_schema), tmp
+            )
+            os.rename(tmp, path)
+        yield path, summarize(rows)
+
+    try:
+        results = rdd.mapPartitions(_task).collect()
+        commit([path for path, _ in results if path is not None])
+        return [summary for _, summary in results]
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+_ATTEMPT_LOG_SCHEMA = StructType(
+    [
+        StructField("event_id", StringType()),
+        StructField("attempt", IntegerType()),
+        StructField("status", IntegerType()),
+        StructField("ok", BooleanType()),
+        StructField("error", StringType()),
+        StructField("at", DoubleType()),
+        StructField("response", StringType()),
+    ]
 )
 
 
@@ -217,14 +316,16 @@ class WebhookSink:
         sink = WebhookSink(cfg, url, headers, attempts_path=...)
         stream.writeStream.foreachBatch(sink).start()
 
-    Attempt history is written executor-side to an append-only parquet
-    log under `attempts_path` (one row per delivery attempt) — the
-    driver keeps only aggregate counters plus the bounded failed-event
-    subset needed for the failure policy (`self.dead_letters`). Round 1
-    collected every attempt row into an unbounded driver list; at one
-    status row per event per batch that is a driver OOM at scale.
-    `self.attempts` re-reads the parquet log (tests/observability
-    accessor — NOT part of the data path).
+    Each micro-batch is delivered and logged in one Spark job
+    (`deliver_and_log`): the delivering tasks write the batch's attempt
+    rows (one per delivery attempt) to parquet, and the driver commits
+    them into the batch's own `batch=<id>` dir under `attempts_path`,
+    clearing it first, so a foreachBatch replay rewrites the batch's
+    attempts instead of duplicating them. The driver keeps only the
+    counters the tasks report plus the failed events the failure policy
+    needs (`self.dead_letters`), never the attempt rows. `self.attempts`
+    re-reads the parquet log (tests/observability accessor — NOT part of
+    the data path).
     """
 
     def __init__(
@@ -251,22 +352,16 @@ class WebhookSink:
         """All attempt rows from the parquet log, in delivery order.
         Reads with pyarrow (no Spark session needed) — observability
         only; the delivery path never materializes this."""
-        import glob as _glob
-        import os as _os
+        import pyarrow.parquet as pq
 
-        import pyarrow.parquet as _pq
-
+        root = glob.escape(self.attempts_path)
         files = sorted(
-            _glob.glob(_os.path.join(_glob.escape(self.attempts_path), "*.parquet"))
-            + _glob.glob(
-                _os.path.join(
-                    _glob.escape(self.attempts_path), "batch=*", "*.parquet"
-                )
-            )
+            glob.glob(os.path.join(root, "*.parquet"))
+            + glob.glob(os.path.join(root, "batch=*", "*.parquet"))
         )
         rows: list[Attempt] = []
         for f in files:
-            t = _pq.read_table(f)
+            t = pq.read_table(f)
             rows.extend(
                 Attempt(
                     r["event_id"], r["attempt"], r["status"],
@@ -310,50 +405,44 @@ class WebhookSink:
                     a.response,
                 )
 
-        # EXACTLY ONE Spark action runs over the delivery RDD: the
-        # parquet write of this batch's attempt log, executor-side,
-        # into the batch's OWN subdirectory (mode-overwrite, so a
-        # foreachBatch replay rewrites instead of duplicating). The
-        # counters and the failure subset then come from ONE aggregate
-        # over the written FILES — a persist + second action would
-        # re-execute _deliver_partition (re-POSTing webhooks) whenever
-        # a cached partition is lost on a real cluster.
-        import os as _os
+        budget = cfg.attempt_budget
 
-        spark = batch.sparkSession
-        adf = spark.createDataFrame(
-            ordered.mapPartitions(_deliver_partition), _ATTEMPT_LOG_SCHEMA
-        )
-        batch_dir = _os.path.join(self.attempts_path, f"batch={batch_id}")
-        adf.write.mode("overwrite").parquet(batch_dir)
-        failed_last = (F.col("attempt") == cfg.attempt_budget - 1) & ~F.col("ok")
-        agg = (
-            spark.read.schema(_ATTEMPT_LOG_SCHEMA)
-            .parquet(batch_dir)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col("ok")).alias("n_ok"),
-                # bounded by the number of FAILED events, not batch size:
-                # collect_list skips the NULL every other row yields
-                F.collect_list(
-                    F.when(failed_last, F.struct("event_id", "status", "error"))
-                ).alias("failed"),
-            )
-            .collect()[0]
-        )
-        self.n_attempts += agg.n
-        self.n_delivered += agg.n_ok
+        def _summarize(rows):
+            n_ok = sum(ok for _, _, _, ok, _, _, _ in rows)
+            # failed events only: bounded by failures, not batch size
+            failed = [
+                (eid, status, error)
+                for eid, attempt, status, ok, error, _, _ in rows
+                if attempt == budget - 1 and not ok
+            ]
+            return len(rows), n_ok, failed
 
-        if agg.failed:
+        batch_dir = os.path.join(self.attempts_path, f"batch={batch_id}")
+
+        def _commit(files):
+            shutil.rmtree(batch_dir, ignore_errors=True)
+            os.makedirs(batch_dir)
+            for f in files:
+                os.rename(f, os.path.join(batch_dir, os.path.basename(f)))
+
+        summaries = deliver_and_log(
+            ordered, _deliver_partition, _ATTEMPT_LOG_SCHEMA,
+            self.attempts_path, _summarize, _commit,
+        )
+        failed = [f for _, _, part in summaries for f in part]
+        self.n_attempts += sum(n for n, _, _ in summaries)
+        self.n_delivered += sum(n_ok for _, n_ok, _ in summaries)
+
+        if failed:
             if cfg.cancel_on_failure:
                 # ST3 strict: fail the micro-batch -> stream halts,
                 # checkpoint replays (transaction-abort analog)
-                failed_ids = sorted(r.event_id for r in agg.failed)
+                failed_ids = sorted(eid for eid, _, _ in failed)
                 raise RuntimeError(
                     f"webhook delivery failed for {len(failed_ids)} event(s) "
-                    f"after {cfg.attempt_budget} attempts: {failed_ids[:3]}..."
+                    f"after {budget} attempts: {failed_ids[:3]}..."
                 )
             self.dead_letters.extend(
-                (r.event_id, f"status={r.status} err={r.error}")
-                for r in agg.failed
+                (eid, f"status={status} err={error}")
+                for eid, status, error in failed
             )

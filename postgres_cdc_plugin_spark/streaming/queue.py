@@ -65,7 +65,12 @@ from pyspark.sql.types import (
 
 from ..config import SubscriptionConfig
 from ..functions.scalar import backoff_delay
-from .deliver import deliver_rows_per_event, delivery_lanes
+from .deliver import (
+    deliver_and_log,
+    deliver_rows_per_event,
+    delivery_lanes,
+    stage_dirs,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -319,8 +324,8 @@ class EventQueue:
 
     @staticmethod
     def _log_files(path: str) -> list[str]:
-        # both layouts coexist: flat appends (direct calls, staged
-        # attempt moves) and per-batch `batch=<id>` overwrite dirs
+        # both layouts coexist: flat appends (direct calls, committed
+        # attempt files) and per-batch `batch=<id>` overwrite dirs
         # (streaming sinks). Enumerating the files and reading the
         # explicit list sidesteps partition discovery on the mixed
         # layout and never surfaces a spurious `batch` column.
@@ -400,7 +405,8 @@ class EventQueue:
         purging rows the reference's event_log would otherwise
         accumulate forever (its schema has no retention either,
         cdc_webhook--1.0.sql:25-47). FAILED events are kept by default
-        as the dead-letter record.
+        as the dead-letter record. Stage dirs a poll tick left behind when
+        its process died are removed.
 
         Rewrite is read -> write-to-temp -> marker-protected directory
         swap; NOT safe to run concurrently with a live poller OR a live
@@ -416,6 +422,9 @@ class EventQueue:
         # heal any swap a previous compact left in flight
         for path in (self.event_log_path, self.attempts_path):
             self._recover_crashed_swap(path)
+        # no poller is live, so every stage dir is a dead tick's
+        for stage in stage_dirs(self.attempts_path):
+            shutil.rmtree(stage, ignore_errors=True)
 
         terminal = ["DELIVERED"] + (["FAILED"] if drop_failed else [])
         # persist the tiny (event_id, status) projection: the status
@@ -753,52 +762,32 @@ class EventQueue:
                     a.response,
                 )
 
-        # EXACTLY ONE Spark action runs over the delivery RDD: the
-        # parquet write to a staging dir. The attempt outcomes then come
-        # from reading the staged FILES back (round-2 review: a persist
-        # + second action re-executes lost cached partitions on a real
-        # cluster, re-POSTing webhooks), and the staged part-files move
-        # into the attempts log afterwards — same filesystem, so the
-        # moves are atomic renames.
-        import shutil
-        import tempfile
-
-        rdd = ready_rdd.mapPartitions(_attempt_partition)
-        os.makedirs(self.attempts_path, exist_ok=True)
-        stage = tempfile.mkdtemp(
-            prefix="attempts-stage-", dir=os.path.dirname(self.attempts_path)
-        )
-        try:
-            stage_data = os.path.join(stage, "data")
-            self.spark.createDataFrame(rdd, _ATTEMPTS_SCHEMA).write.mode(
-                "overwrite"
-            ).parquet(stage_data)
-            staged_files = glob.glob(
-                os.path.join(glob.escape(stage_data), "*.parquet")
-            )
-            results = (
-                self.spark.read.schema(_ATTEMPTS_SCHEMA)
-                .parquet(stage_data)
-                .select("event_id", "ok", "attempted_at")
-                .collect()
-                if staged_files
-                else []
-            )
-            if results:
-                moved = [
-                    os.path.join(self.attempts_path, os.path.basename(f))
-                    for f in staged_files
-                ]
-                # recorded BEFORE the renames, so another scope's tick
-                # never mistakes a file in flight for a foreign write
-                with self._written_lock:
-                    self._written.update(moved)
-                for f, dst in zip(staged_files, moved):
-                    os.rename(f, dst)
-                ws.attempt_files.update(moved)
+        def _commit(files):
+            moved = [
+                os.path.join(self.attempts_path, os.path.basename(f))
+                for f in files
+            ]
+            # recorded BEFORE the renames, so another scope's tick never
+            # mistakes a file in flight for a foreign write
+            with self._written_lock:
+                self._written.update(moved)
+            for f, dst in zip(files, moved):
+                os.rename(f, dst)
+            ws.attempt_files.update(moved)
+            if moved:
                 self.spark.catalog.refreshByPath(self.attempts_path)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+
+        # deliver-and-log: the delivering task writes the attempt rows
+        # and reports (event_id, ok, attempted_at) for each; once the
+        # driver has renamed its file into the attempts log, the
+        # outcomes update the working set
+        summaries = deliver_and_log(
+            ready_rdd, _attempt_partition, _ATTEMPTS_SCHEMA,
+            self.attempts_path,
+            lambda rows: [(eid, ok, at) for eid, _, _, ok, _, at, _ in rows],
+            _commit,
+        )
+        results = [r for part in summaries for r in part]
         # every attempt row is in the log: apply the fold's rules
         for eid, ok, at in results:
             p = ws.pending.get(eid)

@@ -1928,6 +1928,294 @@ def test_queue_clock_is_utc_under_local_driver_timezone(spark, tmp_path):
         time.tzset()
 
 
+
+def _jobs_of(sc, group, fn):
+    """Run fn under a job group; return (its result, the group's job ids)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sink_batch(spark, tmp_path, keys, n_files=None):
+    """A SYNC sink input batch: one change per key (seq = position),
+    read back from `n_files` parquet files when given."""
+    df = spark.createDataFrame(
+        [
+            ((f"ev-{i}",), k, json.dumps({"k": k}), i)
+            for i, k in enumerate(keys)
+        ],
+        "envelope struct<id:string>, key string, payload string, seq long",
+    )
+    if n_files is None:
+        return df
+    path = str(tmp_path / f"batch-src-{n_files}")
+    df.repartition(n_files).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _file_bytes(root):
+    """Every file under root, by relative path, with its bytes."""
+    import pathlib
+
+    root = pathlib.Path(root)
+    return {
+        str(f.relative_to(root)): f.read_bytes()
+        for f in root.rglob("*")
+        if f.is_file()
+    }
+
+
+def test_sink_delivers_and_logs_in_one_action(spark, tmp_path, monkeypatch):
+    """A SYNC sink call over a batch read from several files runs one
+    Spark action over its delivery RDD and reads nothing back: its jobs
+    are the repartition's shuffle-map job (adaptive execution runs it as
+    a job of its own) and the deliver-and-log collect. Every POST has
+    exactly one attempt row."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from postgres_cdc_plugin_spark.streaming.deliver import WebhookSink
+
+    batch = _sink_batch(spark, tmp_path, [str(i % 5) for i in range(20)], 4)
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **kw):
+        reads.append(paths)
+        return parquet(self, *paths, **kw)
+
+    with CaptureServer() as srv:
+        cfg = SubscriptionConfig(
+            name="one_job", table_name="employees", webhook_url=srv.url
+        )
+        sink = WebhookSink(cfg, attempts_path=str(tmp_path / "att"))
+        monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+        _, jobs = _jobs_of(spark.sparkContext, "sink-call", lambda: sink(batch, 0))
+        monkeypatch.undo()
+        assert reads == []
+        assert len(jobs) == 2, jobs
+        assert len(srv.received) == 20
+    assert sink.n_attempts == sink.n_delivered == len(sink.attempts) == 20
+    assert sorted(a.event_id for a in sink.attempts) == sorted(
+        f"ev-{i}" for i in range(20)
+    )
+
+
+def test_busy_poll_tick_runs_one_spark_job(spark, tmp_path):
+    """A poll tick with ready events and no new event-log file runs
+    exactly one Spark job: the deliver-and-log collect. The receiver
+    sees one POST per attempt row."""
+    from postgres_cdc_plugin_spark.streaming.queue import EventQueue
+
+    q = EventQueue(spark, str(tmp_path / "q"))
+    cfg = SubscriptionConfig(
+        name="busy", table_name="employees", webhook_url="http://x/",
+        mode="ASYNC", retry_number=3, retry_interval=1,
+    )
+    _enqueue(spark, q, cfg, 0, "ev-1", "ev-2", "ev-3")
+    later = datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(
+        seconds=30
+    )
+    with CaptureServer(fail_status=500) as srv:
+        assert q.poll_once(cfg, url=srv.url) == 3  # seeds
+        n, jobs = _jobs_of(
+            spark.sparkContext, "busy-tick",
+            lambda: q.poll_once(cfg, url=srv.url, now=later),
+        )
+        assert n == 3 and len(jobs) == 1, jobs
+        assert len(srv.received) == q._attempts().count() == 6
+
+
+def test_sink_replay_keeps_second_call_and_counters_match_files(spark, tmp_path):
+    """Calling the sink twice with one batch id (a foreachBatch replay)
+    against a receiver that fails some keys: batch=<id> holds only the
+    second call's attempt rows, and each call's counter increments and
+    dead letters equal the aggregate over the files it committed."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    from postgres_cdc_plugin_spark.streaming.deliver import (
+        _ATTEMPT_LOG_SCHEMA,
+        WebhookSink,
+    )
+
+    batch = _sink_batch(spark, tmp_path, ["a", "b", "c", "a", "d", "b"])
+    with CaptureServer(fail_status=500, fail_if=lambda d: d["k"] in "bd") as srv:
+        cfg = SubscriptionConfig(
+            name="replay", table_name="employees", webhook_url=srv.url,
+            retry_number=1, cancel_on_failure=False,
+        )
+        sink = WebhookSink(cfg, attempts_path=str(tmp_path / "att"))
+        batch_dir = os.path.join(sink.attempts_path, "batch=7")
+        last_call_start = 0.0
+        for call in range(2):
+            before = (sink.n_attempts, sink.n_delivered, len(sink.dead_letters))
+            last_call_start = time.time()
+            sink(batch, 7)
+            failed_last = (F.col("attempt") == cfg.attempt_budget - 1) & ~F.col(
+                "ok"
+            )
+            agg = (
+                spark.read.schema(_ATTEMPT_LOG_SCHEMA)
+                .parquet(batch_dir)
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_if(F.col("ok")).alias("n_ok"),
+                    F.collect_list(
+                        F.when(failed_last, F.struct("event_id", "status", "error"))
+                    ).alias("failed"),
+                )
+                .collect()[0]
+            )
+            # 2 ok keys (a twice, c once) + 3 failing rows x 2 attempts
+            assert (agg.n, agg.n_ok, len(agg.failed)) == (9, 3, 3)
+            assert sink.n_attempts - before[0] == agg.n
+            assert sink.n_delivered - before[1] == agg.n_ok
+            assert sorted(sink.dead_letters[before[2]:]) == sorted(
+                (r.event_id, f"status={r.status} err={r.error}")
+                for r in agg.failed
+            )
+        assert len(srv.received) == 18 == sink.n_attempts
+    rows = sink.attempts
+    assert len(rows) == 9
+    assert all(a.at >= last_call_start for a in rows)
+
+
+def test_sink_failure_leaves_no_stage_dir(spark, tmp_path):
+    """A sink call that raises (cancel_on_failure against a failing
+    receiver) removes its stage dir and leaves earlier batch dirs as
+    they were; compact() removes a stage dir a dead poll tick left,
+    which neither the log glob nor Spark's reader saw meanwhile."""
+    import os
+    import shutil
+
+    from postgres_cdc_plugin_spark.streaming.deliver import WebhookSink, stage_dirs
+    from postgres_cdc_plugin_spark.streaming.queue import (
+        _ATTEMPTS_SCHEMA,
+        EventQueue,
+    )
+
+    batch = _sink_batch(spark, tmp_path, ["a", "b"])
+    att = str(tmp_path / "att")
+    with CaptureServer() as ok_srv:
+        cfg = SubscriptionConfig(
+            name="hyg", table_name="employees", webhook_url=ok_srv.url,
+            retry_number=0, cancel_on_failure=True,
+        )
+        WebhookSink(cfg, attempts_path=att)(batch, 0)
+    before = _file_bytes(att)
+    assert before and stage_dirs(att) == []
+    with CaptureServer(fail_status=500) as bad:
+        sink = WebhookSink(cfg, url=bad.url, attempts_path=att)
+        with pytest.raises(RuntimeError, match="webhook delivery failed"):
+            sink(batch, 1)
+    assert stage_dirs(att) == []
+    assert {k: v for k, v in _file_bytes(att).items() if "batch=0" in k} == before
+
+    q = EventQueue(spark, str(tmp_path / "q"))
+    # a dead tick's stage: an attempt file that was never committed
+    os.makedirs(q.attempts_path)
+    dead = os.path.join(q.attempts_path, "_stage-dead")
+    shutil.copytree(os.path.join(att, "batch=1"), dead)
+    assert q._log_files(q.attempts_path) == []
+    attempts = spark.read.schema(_ATTEMPTS_SCHEMA).parquet(q.attempts_path)
+    assert attempts.count() == 0
+    q.compact()
+    assert stage_dirs(q.attempts_path) == []
+
+
+def test_pyarrow_attempt_logs_read_like_spark_written(spark, tmp_path):
+    """The same attempt rows — NULL error and response included — written
+    once by Spark's parquet writer and once by deliver_and_log read back
+    identically: through spark.read (explicit and inferred schema), through
+    WebhookSink.attempts, and through the queue's state() fold (status,
+    history arrays and next_attempt to the microsecond)."""
+    import os
+
+    from postgres_cdc_plugin_spark.streaming.deliver import (
+        _ATTEMPT_LOG_SCHEMA,
+        WebhookSink,
+        deliver_and_log,
+    )
+    from postgres_cdc_plugin_spark.streaming.queue import (
+        _ATTEMPTS_SCHEMA,
+        EventQueue,
+    )
+
+    t0 = 1_700_000_000.123456
+    rows = [
+        ("ev-1", 0, 500, False, "boom", t0, "err-body"),
+        ("ev-1", 1, 200, True, None, t0 + 61.000001, '{"ok": true}'),
+        ("ev-2", 0, -1, False, "connection refused", t0 + 0.5, None),
+        ("ev-3", 0, 503, False, None, t0 + 2.25, ""),
+        ("ev-3", 1, -1, False, "timed out", t0 + 3.999999, None),
+    ]
+
+    def helper_write(schema, log_dir, dest):
+        def commit(files):
+            os.makedirs(dest)
+            for f in files:
+                os.rename(f, os.path.join(dest, os.path.basename(f)))
+
+        deliver_and_log(
+            spark.sparkContext.parallelize(rows, 2), lambda it: it, schema,
+            log_dir, len, commit,
+        )
+
+    # the sink's log: batch=0 written by each writer
+    sinks = []
+    for name in ("spark", "arrow"):
+        root = str(tmp_path / f"sink-{name}")
+        dest = os.path.join(root, "batch=0")
+        if name == "spark":
+            spark.createDataFrame(rows, _ATTEMPT_LOG_SCHEMA).write.parquet(dest)
+        else:
+            helper_write(_ATTEMPT_LOG_SCHEMA, root, dest)
+        sinks.append(root)
+    by_spark, by_arrow = (
+        sorted(spark.read.schema(_ATTEMPT_LOG_SCHEMA).parquet(r).collect())
+        for r in sinks
+    )
+    assert by_spark == by_arrow and len(by_arrow) == len(rows)
+    assert spark.read.parquet(sinks[0]).schema == spark.read.parquet(sinks[1]).schema
+    cfg = SubscriptionConfig(name="rt", table_name="employees", webhook_url="http://x/")
+    assert WebhookSink(cfg, attempts_path=sinks[0]).attempts == WebhookSink(
+        cfg, attempts_path=sinks[1]
+    ).attempts
+
+    # the queue's log: the same events, attempts by each writer
+    qcfg = SubscriptionConfig(
+        name="rt_q", table_name="employees", webhook_url="http://x/",
+        mode="ASYNC", retry_number=1, retry_interval=7,
+        retry_backoff="EXPONENTIAL",
+    )
+    queues = [EventQueue(spark, str(tmp_path / f"q-{n}")) for n in ("s", "a")]
+    events = spark.createDataFrame(
+        [((e,), "{}") for e in ("ev-1", "ev-2", "ev-3")],
+        "envelope struct<id:string>, payload string",
+    )
+    queues[0].enqueue_batch(events, qcfg)
+    import shutil
+
+    shutil.copytree(queues[0].event_log_path, queues[1].event_log_path)
+    spark.createDataFrame(rows, _ATTEMPTS_SCHEMA).write.parquet(
+        queues[0].attempts_path
+    )
+    helper_write(_ATTEMPTS_SCHEMA, str(tmp_path / "q-a"), queues[1].attempts_path)
+    assert (
+        spark.read.parquet(queues[0].attempts_path).schema
+        == spark.read.parquet(queues[1].attempts_path).schema
+    )
+    st_spark, st_arrow = (sorted(q.state().collect()) for q in queues)
+    assert st_spark == st_arrow
+    assert [r.status for r in st_arrow] == ["DELIVERED", "PENDING", "FAILED"]
+
+
 def test_streaming_ivf_index_matches_batch_assign(spark, tmp_path, sf_dir):
     """EmbedIvfIndex: the streaming per-batch assignment against a
     frozen codebook equals the batch embed_ivf_assign bit-for-bit

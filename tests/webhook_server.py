@@ -1,7 +1,8 @@
 """In-process webhook capture server for sink tests — the stdlib analog
 of the reference's FastAPI WebhookServer (tests/utilities.py:60-79):
 records every POST body, optional response delay (to force timeouts) and
-forced failure statuses (to drive the retry path). `max_inflight` is the
+forced failure statuses (to drive the retry path; `fail_if` limits the
+failure to the bodies it returns True for). `max_inflight` is the
 peak number of POSTs the server was handling at once (concurrent
 delivery lanes show as a peak above 1)."""
 
@@ -14,12 +15,18 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
 class CaptureServer:
-    def __init__(self, response_delay: float = 0.0, fail_status: int | None = None):
+    def __init__(
+        self,
+        response_delay: float = 0.0,
+        fail_status: int | None = None,
+        fail_if=None,
+    ):
         self.received: list[dict] = []
         self.headers_seen: list[dict] = []
         self.paths_seen: list[str] = []
         self.response_delay = response_delay
         self.fail_status = fail_status
+        self.fail_if = fail_if
         self.inflight = 0
         self.max_inflight = 0
         self._lock = threading.Lock()
@@ -34,12 +41,14 @@ class CaptureServer:
                     outer.max_inflight = max(outer.max_inflight, outer.inflight)
                 if outer.response_delay:
                     time.sleep(outer.response_delay)
+                doc = json.loads(body)
                 with outer._lock:
                     outer.inflight -= 1
-                    outer.received.append(json.loads(body))
+                    outer.received.append(doc)
                     outer.headers_seen.append(dict(self.headers))
                     outer.paths_seen.append(self.path)
-                status = outer.fail_status or 200
+                fails = outer.fail_if is None or outer.fail_if(doc)
+                status = (fails and outer.fail_status) or 200
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
                 self.end_headers()
