@@ -1717,7 +1717,7 @@ def c4_lines_of(lined: DataFrame) -> DataFrame:
 def c4_kept_lines(ln: DataFrame) -> DataFrame:
     """Keep-first keeper tuple of every distinct line — the min-struct
     core of c4_line_dedup_from, exposed so the composed ingest chain
-    (text.ingest_sample_from / streaming IngestPipeline, ST19) counts
+    (text.admission_docs_from / streaming IngestPipeline, ST19) counts
     post-dedup tokens from the IDENTICAL keeper set the line-dedup
     rollup reports. Map-side combinable: a boilerplate line duplicated
     across millions of pages partial-aggregates per map task."""

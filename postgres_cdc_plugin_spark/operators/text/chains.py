@@ -1,14 +1,26 @@
-"""Composed ingest chains (r12 split, verbatim): the three/four/five
-stage batch anchors (gate -> [KN band ->] [near-dup cluster dedup ->]
-line dedup -> admission) that ST19's streaming pipeline surfaces are
-pinned bit-equal to.
+"""The composed ingest chain: one ordered stage list (INGEST_STAGES)
+and one batch composer (ingest_chain_stages) that builds any ordered
+selection of it. Each registered chain query is a selection:
+
+  docs_ingest_chain         gate -> line dedup -> admission
+  docs_ingest_chain_nd      gate -> near-dup dedup -> line dedup
+                            -> admission
+  docs_ingest_chain_kn      gate -> KN band -> near-dup dedup
+                            -> line dedup -> admission
+  docs_ingest_chain_contam  the KN chain -> decontamination
+  docs_ingest_chain_audit   per-stage attrition of the contam chain
+
+streaming/ingest.IngestPipeline composes the same selections at read
+time over its maintained ledgers and is pinned bit-equal to these
+queries.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ...session import load, spread_scan
 
@@ -19,285 +31,135 @@ for _m in (_base, _mixture, _kn,):
         {k: v for k, v in vars(_m).items() if not k.startswith("__")}
     )
 
-def docs_ingest_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ingest pipeline's three data-admitting stages composed in
-    one logical plan (r9 verdict ask #3's batch anchor): Gopher quality
-    gate (ST16's kernel) → corpus-wide C4 keep-first line dedup (ST17's
-    kernel) → temperature-mixture admission (ST18's kernel). Emits the
-    admission ledger over the gated, line-deduped corpus — the document
-    set and token budget a training run would actually draw, where each
-    stage's verdict feeds the next (a gated-out document contributes no
-    lines to keep-first, and dedup losses shrink a language's token
-    mass and therefore every language's quota).
-
-    Every stage reuses the standalone kernel VERBATIM — gopher_rules_df,
-    _C4_LINES_EXPR/c4_lines_of/c4_kept_lines, mixture_sample_from — so
-    the composite is fully oracle-checkable (the DuckDB side chains the
-    same CTEs) and the streaming IngestPipeline (streaming/ingest.py)
-    is pinned bit-equal to THIS query.
-
-    Scale shape: gate = zero-shuffle lambda projection; gated semi-join
-    keys on doc_id; line dedup = one map-side-combinable min-struct agg
-    (the docs_c4_line_dedup cost); token rollup + left join key on
-    doc_id; admission = languages-sized quota rollup + per-language
-    windows (bucketed fill available at 100 TB). Nothing quadratic, no
-    stage re-reads the corpus.
-    """
-    return ingest_chain_from(
-        load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    )
+# the stage list, in chain order; names are the audit's stage names
+INGEST_STAGES = (
+    "gopher_gate", "kn_band", "neardup_dedup", "line_dedup", "admission",
+)
+CHAIN_STAGES = ("gopher_gate", "line_dedup", "admission")
+CHAIN_ND_STAGES = ("gopher_gate", "neardup_dedup", "line_dedup", "admission")
 
 
-def ingest_chain_from(docs: DataFrame) -> DataFrame:
-    """The full chain over an arbitrary (doc_id, text, lang) relation —
-    what docs_ingest_chain runs on the documents table and what the
-    ST19 bit-equality tests run on per-wave subsets."""
-    from ..dedup import c4_lines_of
+class ChainStages(NamedTuple):
+    """A composed chain's stage relations: `gate` the full Gopher
+    verdict relation; `kn_ids` / `nd_ids` the KN-band and near-dup
+    survivor id sets (None when the selection skips the stage);
+    `admit_docs` the admission input (doc_id, lang, n_tokens =
+    kept-line mass after line dedup, priority); `sample` the admission
+    ledger."""
 
-    # r14: guard against the starved one-split scan — the gate lambdas
-    # and the line explode downstream otherwise run in ONE task (the
-    # kept_ids broadcast join preserves the scan's partitioning);
-    # no-op on an input that already carries >= parallelism splits
-    docs = spread_scan(docs, "doc_id")
-    kept_ids = gopher_rules_df(docs).filter("keep").select("doc_id")
-    gated = docs.join(kept_ids, "doc_id").select("doc_id", "text", "lang")
-    lined = gated.select(
-        "doc_id",
-        "lang",
-        F.expr("filter(split(text, ' '), x -> x != '')").alias("ws"),
-    ).select("doc_id", "lang", F.expr(_C4_LINES_EXPR).alias("lines"))
-    return ingest_sample_from(
-        lined.select("doc_id", "lang"), c4_lines_of(lined)
-    )
+    gate: DataFrame
+    kn_ids: DataFrame | None
+    nd_ids: DataFrame | None
+    admit_docs: DataFrame
+    sample: DataFrame
 
 
-def docs_ingest_chain_nd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FOUR-stage ingest chain (r11 — the ST19 composition plus the
-    document-level near-dup stage every modern pipeline runs between
-    the rule gate and line hygiene): Gopher gate → near-dup CLUSTER
-    dedup (ST20's global keep-one-per-component policy) → corpus-wide
-    C4 keep-first line dedup → temperature-mixture admission. Each
-    stage's verdict feeds the next: a gated-out document contributes no
-    near-dup pairs, a cluster loser contributes no lines to keep-first,
-    and dedup losses shrink a language's token mass and therefore every
-    language's quota.
-
-    Every stage reuses the standalone kernel VERBATIM — gopher_rules_df,
-    the PERSISTED corpus-wide SimHash pair relation (restricted to
-    gate-kept endpoints: block agreement is pairwise, so pairs among a
-    subset ARE the corpus pairs with both endpoints in the subset — no
-    signature recompute), dup_clusters_from, _C4_LINES_EXPR/c4_lines_of/
-    c4_kept_lines, mixture_sample_from — so the composite is fully
-    oracle-checkable (the DuckDB side chains the same CTEs with the
-    recursive-CC leg interposed) and the streaming IngestPipeline's
-    sample_nd() is pinned bit-equal to THIS query.
-
-    Scale shape on top of docs_ingest_chain: two doc_id semi-joins of
-    the pair-bounded family relation against the kept set + the
-    diameter-bounded component labeling + one doc_id anti-join — the
-    docs_cluster_dedup cost, and the line explode then runs on the
-    SMALLER deduped corpus (the cheap-before-expensive stage ordering
-    this chain exists to prove out).
-    """
-    return ingest_chain_nd_from(
-        load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    )
+def check_stages(stages: tuple[str, ...]) -> None:
+    """Reject a stage tuple that is not an ordered selection of
+    INGEST_STAGES carrying the gate, line dedup and admission (the
+    composers always run those three)."""
+    ordered = tuple(s for s in INGEST_STAGES if s in stages)
+    if ordered != tuple(stages) or not set(CHAIN_STAGES) <= set(stages):
+        raise ValueError(f"not an ingest chain selection: {stages!r}")
 
 
-def ingest_chain_nd_from(docs: DataFrame) -> DataFrame:
-    """The four-stage chain over an arbitrary (doc_id, text, lang)
-    relation — what docs_ingest_chain_nd runs on the documents table
-    and what the streaming bit-equality tests run on per-wave
-    subsets."""
-    from ..dedup import _simhash_pairs_df, c4_lines_of, dup_clusters_from
-
-    # raw docs feed the PERSISTED simhash family kernel (its plan must
-    # stay byte-identical to the family build's); the spread relation
-    # feeds the gate/explode path — the r14 starved-scan guard
-    raw = docs
-    docs = spread_scan(docs, "doc_id")
-    kept_ids = gopher_rules_df(docs).filter("keep").select("doc_id")
-    gated = docs.join(kept_ids, "doc_id").select("doc_id", "text", "lang")
-    # pairs among gated docs = the persisted corpus pair relation with
-    # both endpoints gate-kept (hamming between fixed signatures does
-    # not depend on other documents)
-    pairs = (
-        _simhash_pairs_df(raw)
-        .join(kept_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .join(kept_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        .select("doc_a", "doc_b")
-    )
-    losers = (
-        dup_clusters_from(docs.sparkSession, pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    nd = gated.join(losers, "doc_id", "left_anti")
-    lined = nd.select(
-        "doc_id",
-        "lang",
-        F.expr("filter(split(text, ' '), x -> x != '')").alias("ws"),
-    ).select("doc_id", "lang", F.expr(_C4_LINES_EXPR).alias("lines"))
-    return ingest_sample_from(
-        lined.select("doc_id", "lang"), c4_lines_of(lined)
-    )
-
-
-def docs_ingest_chain_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FIVE-stage ingest chain (r12, r11 verdict ask #5 — the
-    perplexity filter run as a real pipeline stage, not just the
-    standalone docs_kn_band audit): Gopher gate → Kneser-Ney
-    middle-band keep → near-dup CLUSTER dedup → corpus-wide C4
-    keep-first line dedup → temperature-mixture admission.
-
-    The one semantic subtlety this chain exists to state: the KN model
-    is trained on the GATED corpus — stage order changes the model
-    (CCNet trains its LM on cleaned text; a gated-out document's
-    bigrams must not shape p_kn), and the chained-CTE oracle states
-    this explicitly (the KN scores CTE joins the gate's keep set
-    before counting a single bigram). Band policy: only band = 'keep'
-    passes — 'below' (templated/duplicated), 'above' (noise), and
-    'unscored' (no bigram positions) all stop here; the drops are
-    never silent because docs_kn_band IS this stage's audit relation
-    (same scorer, same band expression, same literals).
-
-    Every stage reuses the standalone kernel VERBATIM — gopher_rules_df,
-    _bigram_counts/kn_surprisal_from/_kn_band_col (docs_kn_band's exact
-    scorer and verdict expression), the PERSISTED corpus-wide SimHash
-    pair relation (restricted to KN-kept endpoints: block agreement is
-    pairwise, so pairs among a subset ARE the corpus pairs with both
-    endpoints in the subset), dup_clusters_from, _C4_LINES_EXPR/
-    c4_lines_of/c4_kept_lines, mixture_sample_from — so the composite
-    is fully oracle-checkable (the DuckDB side chains the same CTEs,
-    built MECHANICALLY from the four-stage oracle) and the streaming
-    IngestPipeline's sample_kn() is pinned bit-equal to THIS query.
-
-    Scale shape on top of docs_ingest_chain_nd: the KN stage adds the
-    docs_kn_surprisal cost restricted to the gated corpus (model
-    Zipf-bounded by distinct bigrams, scoring one g-key join + doc
-    rollup) + one doc_id semi-join — and every later stage (pair
-    labeling, line explode) then runs on the SMALLER KN-kept corpus:
-    the cheap-before-expensive ordering, one stage deeper.
-    """
-    docs = load(spark, sf_dir, "documents")
-    per_doc_full, _ = _bigram_counts(docs)  # the PERSISTED family kernel
-    return ingest_chain_kn_from(
-        docs.select("doc_id", "text", "lang"), per_doc=per_doc_full
-    )
-
-
-def ingest_chain_kn_from(
-    docs: DataFrame, per_doc: DataFrame | None = None
-) -> DataFrame:
-    """The five-stage chain over an arbitrary (doc_id, text, lang)
-    relation — what docs_ingest_chain_kn runs on the documents table
-    and what the streaming bit-equality tests run on per-wave
-    subsets. `per_doc` optionally supplies a pre-built per-(doc,
-    bigram) count relation of `docs` (the bigram_counts FAMILY kernel
-    for the full table): counts are per-document, so the GATED model's
-    relations are exactly this relation filtered to gate-kept ids plus
-    its rollup — no bigram recompute, the same subset-restriction
-    argument as the SimHash pair reuse."""
-    _gate, _kn, _nd_ids, _admit, sample = ingest_chain_kn_stages(
-        docs, per_doc=per_doc
-    )
-    return sample
-
-
-def ingest_chain_kn_stages(
+def ingest_chain_stages(
     docs: DataFrame,
+    stages: tuple[str, ...],
     per_doc: DataFrame | None = None,
     persist_stages: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The five-stage chain's intermediate relations, factored out of
-    ingest_chain_kn_from (r12) so the stage-attrition audit
-    (docs_ingest_chain_audit) and the streaming IngestPipeline.audit()
-    consume the IDENTICAL expression trees as the chain they observe —
-    the audit and the pipeline can never disagree about who survived a
-    stage. Returns (gate, kn_ids, nd_ids, admit_docs, sample): the
-    full Gopher verdict relation, the KN band's keep set, the near-dup
-    survivor id set, the post-line-dedup admission input (doc_id,
-    lang, n_tokens = KEPT-line mass, priority — mixture's
-    admission_docs_from), and the admission ledger.
+) -> ChainStages:
+    """Compose the selected `stages` over an arbitrary (doc_id, text,
+    lang) relation and return the stage relations. Each stage's
+    verdict feeds the next: a gated-out document contributes no
+    bigrams to the KN model, a band or cluster loser no near-dup pairs
+    and no lines to keep-first, and line-dedup losses shrink a
+    language's token mass and therefore every language's quota.
 
-    `persist_stages=True` (the audit's mode, r13 — the r12 verdict's
-    one perf finding was the audit re-running the chain's tail ~2x)
-    eagerly materializes the NARROW stage relations the audit consumes
-    more than once via localCheckpoint (the dup_clusters_from
-    precedent — materialize once AND cut lineage, so the audit's six
-    rollup branches carry tiny plans instead of six copies of the full
-    chain tree; persist alone left ~2.5 s of per-branch planning on
-    the table): the gate keep set and CC loser set (doc_id-only), the
-    KN keep set, and the admission input (doc_id + three short
-    columns). The chain itself consumes each exactly once, so it keeps
-    the default and pays zero materialization it doesn't use."""
+    The KN model is trained on the gated corpus (stage order changes
+    the model). Pairs among surviving documents are the persisted
+    corpus SimHash pair relation with both endpoints surviving
+    (hamming between fixed signatures does not depend on other
+    documents), so no signature is recomputed. `per_doc` optionally
+    supplies the per-(doc, bigram) count relation of `docs` (the
+    bigram_counts family kernel); counts are per-document, so the
+    gated model is that relation restricted to gate-kept ids.
+
+    `persist_stages=True` (the audit's mode) cuts the lineage of the
+    narrow relations the audit consumes several times — the KN keep
+    set, the cluster loser set and the admission input — with an eager
+    localCheckpoint, so its rollup branches carry small plans instead
+    of copies of the chain. The chains consume each once and keep the
+    default."""
+    walk = _chain_walk(docs, stages, per_doc, persist_stages)
+    return ChainStages(**dict(walk))
+
+
+def _chain_walk(docs, stages, per_doc, persist_stages):
+    """ingest_chain_stages as a generator of (field, relation) pairs
+    in ChainStages order. The gate comes first and before any eager
+    step, so the audit can start gate-only work on it while the later
+    stages checkpoint."""
     from ..dedup import _simhash_pairs_df, c4_lines_of, dup_clusters_from
 
-    # raw docs feed the PERSISTED family kernels (simhash pairs /
-    # bigram per-doc — their plans must stay byte-identical to the
-    # family builds'); the spread relation feeds the gate and the
-    # line-explode path — the r14 starved-scan guard (no-op on a
-    # many-split input)
-    raw = docs
-    docs = spread_scan(docs, "doc_id")
+    check_stages(stages)
+    # raw docs feed the persisted family kernels (simhash pairs, bigram
+    # per-doc: their plans must stay identical to the family builds');
+    # the spread relation feeds the gate and the line explode
+    raw, docs = docs, spread_scan(docs, "doc_id")
     gate = gopher_rules_df(docs)
-    # kept_ids stays UNCUT even in audit mode: it sits inside kn_ids'
-    # lineage, and kn_ids' analyzed plan must stay byte-identical to
-    # the chain's so the session-persisted entry is SHARED between the
-    # audit and the chain (the bench runs them back to back; cutting
-    # here forked the plans and cost the chain its cache hit — a real
-    # +2.6s bench drift before this comment existed)
-    kept_ids = gate.filter("keep").select("doc_id")
-    gated = docs.join(kept_ids, "doc_id").select("doc_id", "text", "lang")
-    # KN model trained on the GATED corpus (stage order changes the
-    # model); scorer + band verdict are docs_kn_band's expression trees.
-    # kn_ids is consumed THREE times downstream (both pair endpoints +
-    # the survivor semi-join) — persisted so the scoring subtree runs
-    # once, not three times (the relation is one narrow doc_id column)
-    if per_doc is None:
-        per_doc = bigram_per_doc(raw.select("doc_id", "text"))
-    per_doc_gated = per_doc.join(kept_ids, "doc_id")
-    kn_ids = (
-        gated.select("doc_id")
-        .join(
-            kn_surprisal_from(
-                per_doc_gated, bigram_corpus_from(per_doc_gated)
-            ),
-            "doc_id",
-            "left",
+    yield "gate", gate
+    # ids stays uncut in audit mode: it sits inside kn_ids' lineage,
+    # and kn_ids' plan must match the chain's so the session-persisted
+    # entry is shared between the audit and the chain
+    ids = gate.filter("keep").select("doc_id")
+    cur = docs.join(ids, "doc_id").select("doc_id", "text", "lang")
+    kn_ids = None
+    if "kn_band" in stages:
+        if per_doc is None:
+            per_doc = bigram_per_doc(raw.select("doc_id", "text"))
+        gated_counts = per_doc.join(ids, "doc_id")
+        # consumed three times (both pair endpoints and the survivor
+        # join): persisted so the scoring subtree runs once; the
+        # checkpoint in audit mode materializes through that persist
+        ids = kn_ids = (
+            cur.select("doc_id")
+            .join(
+                kn_surprisal_from(
+                    gated_counts, bigram_corpus_from(gated_counts)
+                ),
+                "doc_id",
+                "left",
+            )
+            .filter(_kn_band_col() == "keep")
+            .select("doc_id")
+            .persist()
         )
-        .filter(_kn_band_col() == "keep")
-        .select("doc_id")
-        .persist()
-    )
-    if persist_stages:
-        # the checkpoint MATERIALIZES through the persisted plan, so
-        # the chain-compatible cache entry is populated as a side
-        # effect; everything downstream in the audit then carries the
-        # tiny checkpointed plan instead of six copies of the scoring
-        # tree (losers/admit below can be cut freely — their lineages
-        # embed dup_clusters_from's own eager localCheckpoint and are
-        # never cross-query shareable anyway)
-        kn_ids = kn_ids.localCheckpoint()
-    kn = gated.join(kn_ids, "doc_id")
-    # pairs among KN-kept docs = the persisted corpus pair relation
-    # with both endpoints KN-kept (hamming between fixed signatures
-    # does not depend on other documents)
-    pairs = (
-        _simhash_pairs_df(raw)
-        .join(kn_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .join(kn_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        .select("doc_a", "doc_b")
-    )
-    losers = (
-        dup_clusters_from(docs.sparkSession, pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    if persist_stages:
-        losers = losers.localCheckpoint()
-    nd = kn.join(losers, "doc_id", "left_anti")
-    lined = nd.select(
+        if persist_stages:
+            ids = kn_ids = kn_ids.localCheckpoint()
+        cur = cur.join(kn_ids, "doc_id")
+    yield "kn_ids", kn_ids
+    nd_ids = None
+    if "neardup_dedup" in stages:
+        pairs = (
+            _simhash_pairs_df(raw)
+            .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+            .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b")
+            .select("doc_a", "doc_b")
+        )
+        losers = (
+            dup_clusters_from(docs.sparkSession, pairs)
+            .filter(F.col("doc_id") != F.col("cluster_id"))
+            .select("doc_id")
+        )
+        if persist_stages:
+            losers = losers.localCheckpoint()
+        cur = cur.join(losers, "doc_id", "left_anti")
+        # id algebra over two narrow relations: the audit's near-dup
+        # row never touches the corpus scan
+        nd_ids = ids.join(losers, "doc_id", "left_anti")
+    yield "nd_ids", nd_ids
+    lined = cur.select(
         "doc_id",
         "lang",
         F.expr("filter(split(text, ' '), x -> x != '')").alias("ws"),
@@ -307,94 +169,145 @@ def ingest_chain_kn_stages(
     )
     if persist_stages:
         admit_docs = admit_docs.localCheckpoint()
-    sample = mixture_sample_from(admit_docs)
-    # the nd ID SET is pure id-algebra over two narrow relations (a KN
-    # keeper is an nd survivor iff it is not a CC loser) — the audit's
-    # stage-3 row never has to touch the corpus scan
-    nd_ids = kn_ids.join(losers, "doc_id", "left_anti")
-    return gate, kn_ids, nd_ids, admit_docs, sample
+    yield "admit_docs", admit_docs
+    yield "sample", mixture_sample_from(admit_docs)
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+
+
+def _family_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The KN stage's per-(doc, bigram) counts over the documents
+    table: the persisted bigram_counts family kernel."""
+    per_doc, _ = _bigram_counts(load(spark, sf_dir, "documents"))
+    return per_doc
+
+
+def _bench_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The benchmark (doc_id, text) relation decontamination probes:
+    the corpus's `src0` split, standing in for a held-out eval suite."""
+    return (
+        load(spark, sf_dir, "documents")
+        .filter(F.col("source") == _BENCH_SOURCE)
+        .select("doc_id", "text")
+    )
+
+
+def docs_ingest_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The three data-admitting stages in one logical plan: Gopher
+    quality gate (gopher_rules_df) → corpus-wide C4 keep-first line
+    dedup → temperature-mixture admission (mixture_sample_from). Emits
+    the admission ledger over the gated, line-deduped corpus — the
+    document set and token budget a training run would draw.
+
+    Every stage is the standalone kernel, so the DuckDB oracle chains
+    the same CTEs; the streaming IngestPipeline.sample() is pinned
+    bit-equal to this query.
+
+    Scale shape: gate = zero-shuffle lambda projection; gated join keys
+    on doc_id; line dedup = one map-side-combinable min-struct agg;
+    token rollup + left join key on doc_id; admission = languages-sized
+    quota rollup + per-language windows. Nothing quadratic, no stage
+    re-reads the corpus.
+    """
+    return ingest_chain_stages(_documents(spark, sf_dir), CHAIN_STAGES).sample
+
+
+def docs_ingest_chain_nd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The four-stage chain: Gopher gate → near-dup CLUSTER dedup
+    (docs_cluster_dedup's keep-one-per-component policy) → C4
+    keep-first line dedup → temperature-mixture admission. A gated-out
+    document contributes no near-dup pairs, and a cluster loser no
+    lines to keep-first.
+
+    The near-dup stage restricts the persisted corpus SimHash pair
+    relation to gate-kept endpoints and labels components with
+    dup_clusters_from; the oracle interposes the same recursive-CC leg.
+    The streaming IngestPipeline.sample_nd() is pinned bit-equal to
+    this query.
+
+    Scale shape on top of docs_ingest_chain: two doc_id joins of the
+    pair-bounded family relation against the kept set, the
+    diameter-bounded component labeling and one doc_id anti-join; the
+    line explode then runs on the smaller deduped corpus.
+    """
+    return ingest_chain_stages(
+        _documents(spark, sf_dir), CHAIN_ND_STAGES
+    ).sample
+
+
+def docs_ingest_chain_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The five-stage chain: Gopher gate → Kneser-Ney middle-band keep
+    → near-dup CLUSTER dedup → C4 keep-first line dedup →
+    temperature-mixture admission.
+
+    The KN model is trained on the GATED corpus (CCNet trains its LM on
+    cleaned text; a gated-out document's bigrams must not shape p_kn),
+    and the oracle's KN CTE joins the gate's keep set before counting a
+    bigram. Only band = 'keep' passes — 'below', 'above' and 'unscored'
+    stop here; docs_kn_band is this stage's audit relation (same
+    scorer, same band expression).
+
+    The scorer and band verdict are docs_kn_band's expressions, the KN
+    counts come from the persisted bigram_counts family kernel, and the
+    streaming IngestPipeline.sample_kn() is pinned bit-equal to this
+    query.
+
+    Scale shape on top of docs_ingest_chain_nd: the docs_kn_surprisal
+    cost restricted to the gated corpus plus one doc_id join, and every
+    later stage runs on the smaller KN-kept corpus.
+    """
+    return ingest_chain_stages(
+        _documents(spark, sf_dir),
+        INGEST_STAGES,
+        per_doc=_family_per_doc(spark, sf_dir),
+    ).sample
 
 
 def docs_ingest_chain_contam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SIX-stage ingest chain (r14, r13 verdict ask #4 — the
-    benchmark-decontamination check run as a real pipeline stage, not
-    just the standalone docs_contamination audit): Gopher gate →
-    Kneser-Ney middle-band keep → near-dup CLUSTER dedup → corpus-wide
-    C4 keep-first line dedup → temperature-mixture admission →
+    """The six-stage chain: the five-stage chain followed by
     DECONTAMINATION — drop any admitted document that shares a distinct
-    token 5-gram with the benchmark corpus (the `src0` source split,
-    standing in for the held-out eval suite as in docs_contamination).
+    token 5-gram with the benchmark corpus (the `src0` split, as in
+    docs_contamination).
 
-    The one semantic statement this stage adds: decontamination is
-    TERMINAL — it runs AFTER admission, so quotas do NOT refill around
-    a contaminated document (the realized token mass simply falls
-    short, exactly like a production pipeline that decontaminates its
-    sampled training set against eval benchmarks as the last pass; the
-    shortfall is visible in the audit's decontam row rather than
-    silently absorbed by re-sampling). The verdict is uniform — the
-    benchmark split's own documents are probed too, and drop by
-    construction (their grams ARE benchmark grams), so the eval split
-    can never leak into `train` no matter what the earlier stages
-    admitted. Contamination is measured on GATE-kept documents (a
-    per-document deterministic verdict against a fixed gram set, so
-    restricting the probe to any superset of the admitted docs is
-    exact); gate-kept rather than nd-kept keeps the hits relation's
-    plan IDENTICAL between this chain and the attrition audit in both
-    persist modes — the kn_ids cache-contract argument, one stage
-    later (pinned by sameSemantics in tests/test_plans.py).
+    Decontamination is TERMINAL: it runs after admission, so quotas do
+    not refill around a contaminated document; the shortfall shows in
+    the audit's decontam row. The verdict is uniform — the benchmark
+    split's own documents are probed too and drop by construction, so
+    the eval split never leaks into `train`. Contamination is measured
+    on GATE-kept documents (a per-document verdict against a fixed gram
+    set, so probing any superset of the admitted docs is exact), which
+    keeps the hits relation's plan identical between this chain and
+    the audit (pinned by sameSemantics in tests/test_plans.py).
 
-    Emits the five-stage admission ledger widened by two columns:
-    n_contam_grams (distinct contaminated 5-grams, 0 for clean) and
-    train = selected AND clean — the document set a run actually
-    trains on. Every kernel is shared VERBATIM: ingest_chain_kn_stages
-    (all five upstream stages), doc_grams_of/_gram_array_expr (the
-    docs_contamination gram unit), contam_hits_from, and
-    contam_sample_from is what the streaming IngestPipeline's
-    sample_contam() runs at read time — bit-equality by construction.
+    Emits the five-stage admission ledger widened by n_contam_grams
+    (0 for clean documents) and train = selected AND clean. The
+    terminal stage is contam_sample_from, which the streaming
+    IngestPipeline.sample_contam() runs at read time.
 
     Scale shape on top of docs_ingest_chain_kn: one gram explode over
-    the GATE-kept corpus (narrow, zero-shuffle build), a broadcast
-    membership probe against the benchmark set (eval suites are tiny
-    vs 100 TB), one doc_id-keyed count, one doc-grain left join. The
-    oracle chains the same CTEs (bgrams/dgrams/hits) onto the
-    five-stage oracle MECHANICALLY.
+    the gate-kept corpus, a broadcast membership probe against the
+    benchmark set, one doc_id-keyed count and one doc-grain left join.
     """
-    docs = load(spark, sf_dir, "documents")
-    per_doc_full, _ = _bigram_counts(docs)  # the PERSISTED family kernel
-    return ingest_chain_contam_from(
-        docs.select("doc_id", "text", "lang"),
-        docs.filter(F.col("source") == _BENCH_SOURCE).select(
-            "doc_id", "text"
-        ),
-        per_doc=per_doc_full,
+    docs = _documents(spark, sf_dir)
+    st = ingest_chain_stages(
+        docs, INGEST_STAGES, per_doc=_family_per_doc(spark, sf_dir)
     )
+    hits = _contam_hits_gated(docs, st.gate, _bench_docs(spark, sf_dir))
+    return contam_sample_from(st.sample, hits)
 
 
-def ingest_chain_contam_from(
-    docs: DataFrame, bench_docs: DataFrame, per_doc: DataFrame | None = None
-) -> DataFrame:
-    """The six-stage chain over arbitrary (doc_id, text, lang) corpus
-    and (doc_id, text) benchmark relations — what
-    docs_ingest_chain_contam runs on the documents table and what the
-    streaming bit-equality tests run on per-wave subsets."""
-    gate, _kn, _nd, _admit, sample = ingest_chain_kn_stages(
-        docs, per_doc=per_doc
-    )
-    return contam_sample_from(
-        sample, _contam_hits_gated(docs, gate, bench_docs)
-    )
 
 
 def _contam_hits_gated(
     docs: DataFrame, gate: DataFrame, bench_docs: DataFrame
 ) -> DataFrame:
     """The decontamination hits relation over the GATE-kept corpus,
-    session-persisted. Built from the UNCUT gate plan in BOTH persist
-    modes (the kept_ids cache-contract comment in
-    ingest_chain_kn_stages), so the chain and the audit construct the
-    SAME analyzed plan and the bench pair shares ONE gram-explode +
-    probe pass through the session cache — pinned by sameSemantics in
-    tests/test_plans.py alongside the kn_ids pin."""
+    session-persisted. Built from the uncut gate plan in both persist
+    modes, so the six-stage chain and the audit construct the same
+    analyzed plan and share one gram-explode + probe pass through the
+    session cache (pinned by sameSemantics in tests/test_plans.py)."""
     kept = spread_scan(docs, "doc_id").join(
         gate.filter("keep").select("doc_id"), "doc_id"
     ).select("doc_id", "text")
@@ -405,12 +318,10 @@ def _contam_hits_gated(
 
 def contam_sample_from(sample: DataFrame, hits: DataFrame) -> DataFrame:
     """The terminal decontamination stage over an admission ledger —
-    the five-stage sample's rows widened by (n_contam_grams, train).
-    Shared VERBATIM by the batch six-stage chain and the streaming
-    IngestPipeline.sample_contam(), so the two surfaces can never
-    disagree about which admitted document leaked eval data. `hits` is
-    hit-sized (clean docs absent); the LEFT join + coalesce restores
-    the zero."""
+    the sample's rows widened by (n_contam_grams, train). Shared by the
+    batch six-stage chain and the streaming
+    IngestPipeline.sample_contam(). `hits` is hit-sized (clean docs
+    absent); the LEFT join + coalesce restores the zero."""
     n = F.coalesce(F.col("n_contam_grams"), F.lit(0)).cast("bigint")
     return sample.join(hits, "doc_id", "left").select(
         *sample.columns,
@@ -420,123 +331,80 @@ def contam_sample_from(sample: DataFrame, hits: DataFrame) -> DataFrame:
 
 
 def docs_ingest_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-attrition audit of the SIX-stage ingest chain (r12; r13:
-    the line-dedup stage made visible + the chain-tail recompute
-    fixed; r14: the terminal decontamination stage appended — r13
-    verdict ask #4): per stage (raw → Gopher gate → KN band → near-dup
-    cluster dedup → line dedup → admission → decontam) the surviving
-    document count, the token mass AS MEASURED AT THAT STAGE, and the
-    kept fraction of both vs the previous stage — the observability
-    relation a pipeline owner reads BEFORE committing a filter cascade
-    to a 100 TB run (a stage that silently drops 60% of a corpus is a
-    configuration bug the per-stage table surfaces in one glance;
-    Gopher/C4/CCNet papers all publish exactly this table for their
-    pipelines). The decontam row reports the TRAIN set — admitted AND
-    benchmark-clean — in the admission unit, so eval leakage removed
-    after sampling is visible as its own attrition step rather than
-    folded into utilization shortfall.
+    """Stage-attrition audit of the six-stage chain: per stage (raw →
+    Gopher gate → KN band → near-dup cluster dedup → line dedup →
+    admission → decontam) the surviving document count, the token mass
+    as measured at that stage, and the kept fraction of both against
+    the previous stage — the table Gopher/C4/CCNet publish for their
+    pipelines, read before committing a filter cascade to a large run.
+    The decontam row reports the TRAIN set (admitted AND
+    benchmark-clean) in the admission unit.
 
-    Mass semantics (r13, r12 verdict ask #3): stages 0-3 report mass
-    in the GATE's own unit (gopher_rules_df's n_words — split tokens,
-    NULL text counting 0 by explicit policy: a document with no text
-    still attrits visibly); the line_dedup and admission rows report
-    KEPT-line token mass — the admission ledger's own n_tokens
-    (mixture's admission_docs_from, the mass a training run actually
-    draws). Line dedup drops lines, never documents, so its row shows
-    kept_frac = 1.0 with mass_frac < 1 — doc attrition and mass
-    attrition are now separately visible, which is exactly what the
-    r12 table could not show.
+    Mass units: stages 0-3 report mass in the gate's own unit
+    (gopher_rules_df's n_words — split tokens, NULL text counting 0);
+    the line_dedup and admission rows report kept-line token mass, the
+    admission input's n_tokens. Line dedup drops lines, never
+    documents, so its row shows kept_frac = 1.0 with mass_frac < 1.
+    The two units also differ in empty-token handling: n_words counts
+    the empty tokens a raw split(' ') yields for repeated, leading or
+    trailing spaces, while the admission unit drops them before lines
+    are cut (_C4_LINES_EXPR). The line_dedup row's mass_frac therefore
+    folds that unit change into the dedup loss and can read < 1 with
+    no duplicate line; the streaming gate ledger keeps only n_words, so
+    both surfaces measure it this way.
 
-    Unit-switch caveat (r13 advice): the two units differ not only in
-    line membership but in EMPTY-token handling — n_words counts the
-    empty tokens a raw split(' ') yields for consecutive/leading/
-    trailing spaces, while the admission unit filters them before the
-    line grain is cut (_C4_LINES_EXPR). The line_dedup row's mass_frac
-    therefore folds the empty-token component of the unit change into
-    the dedup loss: on a corpus with many consecutive spaces it reads
-    < 1 even with zero duplicate lines. This is a reading note, not a
-    measurement bug — stage-3 mass cannot be restated in the non-empty
-    unit without widening the streaming gate ledger (the ONE relation
-    both surfaces maintain for gate-dropped docs carries only the
-    gate's own n_words), and the two surfaces must measure
-    identically. A reader separating the components re-derives raw
-    non-empty mass from the admission input pre-dedup (not maintained
-    here by design: it is the unit switch, not an attrition stage).
-
-    Composition-proven: every stage set comes from
-    ingest_chain_kn_stages — the IDENTICAL expression trees
-    docs_ingest_chain_kn runs (same gate, same gated-corpus KN model,
-    same pair restriction, same admission input) — and the rollup
-    itself is ingest_audit_from, shared VERBATIM with the streaming
-    IngestPipeline.audit(); the oracle is derived MECHANICALLY from
-    the chain oracle by swapping only the final SELECT for the stage
-    rollup over the same CTEs.
+    Every stage set comes from the five-stage selection of
+    ingest_chain_stages — the relations docs_ingest_chain_kn runs — and
+    the rollup is ingest_audit_from, shared with the streaming
+    IngestPipeline.audit(); the oracle swaps only the chain oracle's
+    final SELECT for the stage rollup.
 
     Determinism: counts and token sums are exact int64; kept_frac and
     mass_frac are exact int64/int64 IEEE divisions (NULL for the raw
-    row). 7 rows out; the lag window is a 7-row driver-side
-    triviality.
+    row). 7 rows out.
 
-    Scale: persist_stages=True materializes the gate verdicts, the CC
-    loser set, and the admission input ONCE (all doc-grain, ≤4 short
-    columns), so the audit costs the chain's own lineage plus seven
-    count/sum rollups with map-side partials over persisted narrow
-    relations — not a second run of the pair-join/CC tail (the r12
-    bench's top row, 1.9x the chain it observed; the r12 verdict's
-    one perf finding). The decontam row reuses the SAME session-
-    persisted hits relation as docs_ingest_chain_contam
-    (_contam_hits_gated's plan-identity contract), so the bench pair
-    pays one gram-explode + probe pass, the kn_ids discipline one
-    stage later.
+    Scale: persist_stages=True checkpoints the KN keep set, the cluster
+    loser set and the admission input once, so the audit costs the
+    chain's own lineage plus seven map-side-combinable rollups over
+    narrow relations. The gate verdicts and the decontam hits depend
+    only on the gate, so they materialize on a second Python thread
+    (inheriting the caller's job group and local properties) while the
+    main thread walks the chain's checkpoints. The hits relation is the
+    session-persisted one docs_ingest_chain_contam reads, so the pair
+    pays one gram-explode + probe pass.
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    docs = load(spark, sf_dir, "documents")
-    per_doc_full, _ = _bigram_counts(docs)  # the PERSISTED family kernel
-    d3 = docs.select("doc_id", "text", "lang")
-    # r15 (§2.6 overlap independent jobs): the audit's wall-clock was
-    # five eager materializations executing BACK TO BACK on the driver
-    # (kn_ids -> CC losers -> admit checkpoints, then the verdicts
-    # checkpoint, then the contam hits build inside the final job) —
-    # 8-core ≈ 32-core (scaling 1.15, r14 PERF). The hits relation and
-    # the verdicts relation depend ONLY on the gate, not on the
-    # KN/CC/admission tail, so both materialize on a second driver
-    # thread while the main thread walks the chain's serial
-    # checkpoints. The gate here is constructed exactly as
-    # ingest_chain_kn_stages constructs it (gopher_rules_df over the
-    # spread_scan'd corpus), so the hits plan stays semantically
-    # IDENTICAL to docs_ingest_chain_contam's and the session-persist
-    # is still shared (the sameSemantics pin in tests/test_plans.py).
-    gate_pre = gopher_rules_df(spread_scan(d3, "doc_id"))
-    hits = _contam_hits_gated(
-        d3,
-        gate_pre,
-        docs.filter(F.col("source") == _BENCH_SOURCE).select(
-            "doc_id", "text"
-        ),
+    from pyspark import inheritable_thread_target
+
+    docs = _documents(spark, sf_dir)
+    walk = _chain_walk(
+        docs, INGEST_STAGES, _family_per_doc(spark, sf_dir), True
     )
+    _, gate = next(walk)
+    hits = _contam_hits_gated(docs, gate, _bench_docs(spark, sf_dir))
 
     def _materialize_side() -> DataFrame:
         spark.sparkContext.setJobDescription(
             "ingest_chain_audit: gate-branch overlap (verdicts + hits)"
         )
-        v = audit_verdicts_from(gate_pre).localCheckpoint()
+        # two short columns at doc grain, consumed by five of the seven
+        # stage rows: materialized once, lineage cut
+        v = audit_verdicts_from(gate).localCheckpoint()
         hits.write.format("noop").mode("overwrite").save()
         return v
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        side = pool.submit(_materialize_side)
-        gate, kn_ids, nd_ids, admit_docs, sample = ingest_chain_kn_stages(
-            d3,
-            per_doc=per_doc_full,
-            persist_stages=True,
-        )
-        # two short columns at doc grain, consumed by five of the seven
-        # stage rows — materialized once, lineage cut (see persist_stages)
+        side = pool.submit(inheritable_thread_target(spark)(_materialize_side))
+        st = ChainStages(gate=gate, **dict(walk))
         verdicts = side.result()
-    final = contam_sample_from(sample, hits)
     return ingest_audit_from(
-        verdicts, kn_ids, nd_ids, admit_docs, sample, final
+        verdicts,
+        st.kn_ids,
+        st.nd_ids,
+        st.admit_docs,
+        st.sample,
+        contam_sample_from(st.sample, hits),
     )
 
 
@@ -545,9 +413,8 @@ def audit_verdicts_from(gate: DataFrame) -> DataFrame:
     — (doc_id, nt = raw mass in the gate's own n_words unit with NULL
     text counting 0, keep) — ONE projection shared by the batch audit
     and the streaming IngestPipeline.audit() so raw mass is measured
-    identically on both surfaces (and so each can persist it through
-    its own cache discipline: the batch query session-persists, the
-    streaming consumer wave-caches)."""
+    identically on both surfaces (the batch audit checkpoints it, the
+    streaming consumer wave-caches it)."""
     return gate.select(
         "doc_id",
         F.coalesce(F.col("n_words"), F.lit(0)).cast("long").alias("nt"),
@@ -565,7 +432,7 @@ def ingest_audit_from(
 ) -> DataFrame:
     """The seven-row stage-attrition rollup over the chain's stage
     relations — ONE expression tree shared by docs_ingest_chain_audit
-    (batch, over ingest_chain_kn_stages) and the streaming
+    (batch, over ingest_chain_stages) and the streaming
     IngestPipeline.audit() (over the maintained ledgers), so the two
     surfaces can never disagree about a stage row. Raw mass comes from
     the gate relation's own n_words via audit_verdicts_from (the unit

@@ -1,7 +1,7 @@
 """Mixture-design families (r12 split, verbatim): temperature
 (Conneau-Lample) and UniMax (Chung et al.) design -> realization ->
-audit triads, the bucketed 100 TB fill variants, and ingest_sample_from
-(the admission kernel the ingest chains and ST18/ST19 share). The
+audit triads, the bucketed 100 TB fill variants, and admission_docs_from
+(the admission input the ingest chains and ST18/ST19 share). The
 namespace merge below reproduces the monolith's globals for this
 segment, exactly as the single file resolved them.
 """
@@ -680,38 +680,18 @@ def _unimax_ledger(d: DataFrame, admit) -> DataFrame:
     )
 
 
-def ingest_sample_from(doc_langs: DataFrame, ln: DataFrame) -> DataFrame:
-    """Mixture admission over a LINE-DEDUPED corpus — the read-time
-    kernel of the composed ingest chain (ST19), shared VERBATIM by the
-    batch query docs_ingest_chain and streaming/ingest.IngestPipeline
-    so the composed streaming surface is bit-equal to the batch chain.
-
-    Inputs: `doc_langs` (doc_id, lang) — the gate-kept document set —
-    and `ln` (doc_id, line_no, line) — the C4 line relation of those
-    documents. Post-dedup token counts come from dedup.c4_kept_lines
-    (the IDENTICAL keeper set the line-dedup rollup reports: keep-first
-    min-struct per distinct line), so a document whose lines all lost
-    keep-first enters admission with n_tokens = 0 rather than
-    vanishing. Priority is md5(doc_id) — the mixture_doc_relation
-    convention — and the admission itself is mixture_sample_from
-    VERBATIM.
-
-    Scale: the keeper aggregation is the line-dedup cost already paid
-    (map-side combinable min-struct); the token rollup and the
-    doc-grain left join key on doc_id; admission adds the per-language
-    windows (or the bucketed fill at 100 TB over the same relation).
-    """
-    return mixture_sample_from(admission_docs_from(doc_langs, ln))
-
-
 def admission_docs_from(doc_langs: DataFrame, ln: DataFrame) -> DataFrame:
     """The admission INPUT relation of the composed ingest chain —
-    (doc_id, lang, n_tokens, priority) where n_tokens is the KEPT-line
-    token mass after corpus-wide keep-first line dedup (r13 factoring
-    of ingest_sample_from's first half, so the stage-attrition audit's
-    line_dedup row and the admission ledger consume the IDENTICAL
-    post-dedup mass relation — the audit can never disagree with the
-    ledger about how many tokens line dedup kept)."""
+    (doc_id, lang, n_tokens, priority) over the gate-kept (`doc_langs`:
+    doc_id, lang) documents and their C4 line relation (`ln`: doc_id,
+    line_no, line). n_tokens is the KEPT-line token mass after
+    corpus-wide keep-first line dedup, counted from dedup.c4_kept_lines
+    (the keeper set the line-dedup rollup reports), so a document
+    whose lines all lost keep-first enters admission with n_tokens = 0
+    rather than vanishing; priority is md5(doc_id), the
+    mixture_doc_relation convention. The stage-attrition audit's
+    line_dedup row and the admission ledger (mixture_sample_from over
+    this relation) consume the same post-dedup mass relation."""
     from ..dedup import c4_kept_lines
 
     kept_tok = (

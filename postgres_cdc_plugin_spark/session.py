@@ -145,12 +145,12 @@ def _is_scan_rooted(df) -> bool:
     (project/filter over a file relation) — the precondition for
     probing df.rdd.getNumPartitions() cheaply. Under AQE, .rdd on a
     plan containing exchanges EXECUTES the upstream query stages
-    (hidden jobs at plan-construction time — r14 advice); a plan with
-    any join/aggregate/window/repartition upstream is therefore never
+    (hidden jobs at plan-construction time); a plan with any
+    join/aggregate/distinct/window/repartition node upstream is never
     probed, and the guards below fall back to the identity arm (their
-    scale-side behavior). Every internal caller passes a scan-rooted
-    relation, so this changes nothing for registered queries."""
-    plan = df._jdf.queryExecution().analyzed().toString()
+    scale-side behavior). The check walks the plan's node names
+    (children and subquery plans), so a column name, literal or path
+    that happens to contain one of the tokens does not count."""
     blocked = (
         "Join",
         "Aggregate",
@@ -161,8 +161,20 @@ def _is_scan_rooted(df) -> bool:
         "GlobalLimit",
         "Generate",
         "Union",
+        "Deduplicate",
+        "Distinct",
+        "Intersect",
+        "Except",
     )
-    return not any(tok in plan for tok in blocked)
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if any(tok in name for tok in blocked):
+            return False
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return True
 
 
 def spread_scan(df, *cols):

@@ -241,6 +241,19 @@ def stage_dirs(log_dir: str) -> list[str]:
     return glob.glob(os.path.join(glob.escape(log_dir), _STAGE_PREFIX + "*"))
 
 
+def log_files(log_dir: str) -> list[str]:
+    """The committed parquet files of a log dir, sorted. Both layouts
+    coexist: flat appends (direct calls, committed attempt files) and
+    per-batch `batch=<id>` overwrite dirs (streaming sinks). Reading
+    this explicit list sidesteps partition discovery on the mixed
+    layout and never surfaces a spurious `batch` column."""
+    root = glob.escape(log_dir)
+    return sorted(
+        glob.glob(os.path.join(root, "*.parquet"))
+        + glob.glob(os.path.join(root, "batch=*", "*.parquet"))
+    )
+
+
 def deliver_and_log(
     rdd, deliver, schema: StructType, log_dir: str, summarize, commit
 ) -> list:
@@ -354,13 +367,8 @@ class WebhookSink:
         only; the delivery path never materializes this."""
         import pyarrow.parquet as pq
 
-        root = glob.escape(self.attempts_path)
-        files = sorted(
-            glob.glob(os.path.join(root, "*.parquet"))
-            + glob.glob(os.path.join(root, "batch=*", "*.parquet"))
-        )
         rows: list[Attempt] = []
-        for f in files:
+        for f in log_files(self.attempts_path):
             t = pq.read_table(f)
             rows.extend(
                 Attempt(

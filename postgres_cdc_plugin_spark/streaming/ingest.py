@@ -1,73 +1,53 @@
-"""Composed streaming ingest pipeline — ST19 (r9 verdict ask #3): the
-three data-admitting ledgers chained over ONE document feed, with the
-composed read-back pinned bit-equal to the batch chain of the same
-kernels (operators/text.docs_ingest_chain).
+"""Composed streaming ingest pipeline: the ingest chain's stages
+maintained over ONE document feed, with every composed read-back
+pinned bit-equal to the batch chain query of the same selection
+(operators/text/chains.py).
 
-The individual ledgers are proven bit-equal to their batch queries in
-isolation (ST16 quality gate, ST17 C4 line dedup, ST18 mixture
-admission); the composition is where ordering and redelivery bugs
-actually live — a document the gate drops must NEVER contribute lines
-to keep-first or tokens to a language's quota, including after a
-checkpoint resume or a redelivered batch. IngestPipeline therefore
-gates each micro-batch ON ARRIVAL (gate verdicts are deterministic per
-document, so batch-time filtering is exact) and lands three relations
-per batch:
+The composition is where ordering and redelivery bugs live — a
+document the gate drops must NEVER contribute lines to keep-first or
+tokens to a language's quota, including after a checkpoint resume or
+a redelivered batch. IngestPipeline therefore gates each micro-batch
+ON ARRIVAL (gate verdicts are deterministic per document, so
+batch-time filtering is exact) and lands per batch:
 
   gate/batch=<id>        — the full per-doc Gopher verdict relation
-                           (operators/text.gopher_rules_df VERBATIM);
+                           (operators/text.gopher_rules_df);
   langs/batch=<id>       — (doc_id, lang) of the KEPT documents only;
   sigs/batch=<id>        — SimHash signature blocks of the kept
-                           documents (r11 — operators/dedup.
-                           _simhash_blocks_df VERBATIM; feeds the
-                           read-time near-dup stage of sample_nd());
+                           documents (operators/dedup._simhash_blocks_df;
+                           the near-dup stage's input);
   grams/batch=<id>       — per-(doc, bigram) counts of the kept
-                           documents (r12 — operators/text.
-                           bigram_per_doc VERBATIM, the ST21 storage
-                           grain: counts over GATE-KEPT docs are
-                           exactly the KN model trained on the gated
-                           corpus, since corpus counts are the
-                           SUM-mergeable rollup of per-doc counts;
-                           feeds the read-time KN band stage of
-                           sample_kn());
+                           documents (operators/text.bigram_per_doc;
+                           their SUM rollup IS the gated corpus's
+                           counts, the KN stage's input);
   cgrams/batch=<id>      — distinct contamination 5-grams of the kept
-                           documents (r14 — operators/text.
-                           doc_grams_of VERBATIM; feeds the read-time
-                           decontamination stage of sample_contam()
-                           and the audit's decontam row: gram sets
-                           are per-document deterministic, so the
-                           arrival-time shingle is exact, while the
-                           benchmark set stays an EXTERNAL relation
-                           passed at read time — an eval suite is a
-                           fixed corpus, not part of the stream);
+                           documents (operators/text.doc_grams_of; the
+                           decontamination stage's input — the
+                           benchmark set stays an external relation
+                           passed at read time);
   lines/batch=<id>/{docs,lines} — the C4 line relation of the kept
-                           documents (delegated to C4LineLedger —
-                           _C4_LINES_EXPR/c4_lines_of VERBATIM).
+                           documents (delegated to C4LineLedger).
 
-Global decisions (keep-first line dedup, mixture quotas/admission) are
-made at READ time over the maintained relations — the ST17/ST18
-pattern: one late document moves keep-first verdicts and every
-language's quota, so no per-batch transform can emit final answers.
-The composed sample() runs operators/text.ingest_sample_from VERBATIM
-(c4_kept_lines keeper set → post-dedup token counts →
-mixture_sample_from), which is exactly what docs_ingest_chain runs on
-the gated corpus — bit-equality is by construction, and pinned in
-tests/test_streaming.py together with replay idempotence and
-cross-ledger checkpoint resume.
+Global decisions (KN model, cluster labels, keep-first line dedup,
+quotas and admission) are made at READ time over the maintained
+relations: one late document moves them all, so no per-batch
+transform can emit final answers. One read-time composer (_stages)
+builds every selection of operators/text.INGEST_STAGES from the same
+kernels the batch composer uses, so bit-equality holds by
+construction; tests/test_streaming.py pins it together with replay
+idempotence and checkpoint resume.
 
-Atomic visibility across the SIX roots: a batch is readable only
-when gate, langs, sigs, grams, cgrams, AND both line relations committed
+Atomic visibility across the six roots: a batch is readable only when
+gate, langs, sigs, grams, cgrams and both line relations committed
 (`_SUCCESS` witnesses intersected — streaming/ledger.py, including the
-loud marker-disabled failure). A crash between any two sub-writes leaves
+loud marker-disabled failure). A crash between two sub-writes leaves
 the batch invisible to every composed surface; the checkpoint replays
 it and the overwrites complete it all-or-nothing.
 
 Scale shape per batch: the gate is a zero-shuffle lambda projection;
-the line explode is the ~n_words/_C4_LINE_WORDS relation line dedup
-pays anyway, amortized to arrival time; langs is two short columns at
-doc grain. The read-back costs what the batch chain costs — one
-map-side-combinable min-struct aggregation, a doc-keyed token rollup,
-and the languages-sized quota + admission windows — on an
-always-current corpus.
+the line explode is the relation line dedup pays anyway, amortized to
+arrival time; langs is two short columns at doc grain. A read-back
+costs what the batch chain costs, on an always-current corpus.
 """
 
 from __future__ import annotations
@@ -83,15 +63,14 @@ INGEST_STREAM_SCHEMA = "doc_id bigint, text string, lang string"
 
 
 class IngestPipeline:
-    """Gate → line-dedup → mixture-admission over a streaming document
-    feed. `sample()` is the docs_ingest_chain relation over every
-    document seen so far; `sample_nd()`/`sample_kn()`/
-    `sample_contam()` the four-/five-/six-stage chains; `audit()` the
-    six-stage stage-attrition table
-    (bit-equal to docs_ingest_chain_audit); `selected_docs()` the
-    admitted ids; `dedup()` the line-dedup rollup of the gated corpus;
-    `verdicts()` the gate relation (all restricted to fully-committed
-    batches)."""
+    """The ingest chain over a streaming document feed. `sample()`,
+    `sample_nd()`, `sample_kn()` and `sample_contam()` are the three- to
+    six-stage chain relations over every document seen so far (the
+    docs_ingest_chain* queries); `audit()` the six-stage
+    stage-attrition table (docs_ingest_chain_audit); `selected_docs()`
+    the admitted ids; `dedup()` the line-dedup rollup of the gated
+    corpus; `verdicts()` the gate relation. All read fully-committed
+    batches only."""
 
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
@@ -101,20 +80,25 @@ class IngestPipeline:
         self.sigs_dir = os.path.join(out_dir, "sigs")
         self.grams_dir = os.path.join(out_dir, "grams")
         self.cgrams_dir = os.path.join(out_dir, "cgrams")
-        os.makedirs(self.langs_dir, exist_ok=True)
-        os.makedirs(self.sigs_dir, exist_ok=True)
-        os.makedirs(self.grams_dir, exist_ok=True)
-        os.makedirs(self.cgrams_dir, exist_ok=True)
+        # the one-relation-per-batch roots (lines nests docs + lines)
+        self._flat_roots = (
+            self.gate.out_dir,
+            self.langs_dir,
+            self.sigs_dir,
+            self.grams_dir,
+            self.cgrams_dir,
+        )
+        for d in self._flat_roots[1:]:
+            os.makedirs(d, exist_ok=True)
         # per-key bounded persist cache for read-time intermediates
-        # consumed several times within one wave (kn keep set, CC
+        # consumed several times within one wave (kn keep set, cluster
         # losers, admission input, line-dedup rollup): keyed by the
         # committed batch-id set PLUS a file-mtime fingerprint
-        # (_wave_token), so a SAME-wave second consumer (audit() after
-        # sample_kn()) reuses the materialization, while a NEW wave or
+        # (_wave_token), so a same-wave second consumer (audit() after
+        # sample_kn()) reuses the materialization, while a new wave or
         # a replayed in-place overwrite unpersists the stale entry
         # first — a polling consumer never leaks cache entries and
-        # never serves a plan over replaced files (the r12 sample_kn
-        # review finding generalized + the r13 replay advice)
+        # never serves a plan over replaced files
         self._wave_cache: dict[
             str, tuple[tuple[tuple[str, ...], int], DataFrame]
         ] = {}
@@ -122,7 +106,7 @@ class IngestPipeline:
     def _wave_token(self, ids: list[str]) -> tuple[tuple[str, ...], int]:
         """Cache key for the committed wave: the batch-id set PLUS the
         max file mtime_ns across those batches' dirs in every root. The
-        id set alone is not enough (r13 advice): a REPLAYED batch
+        id set alone is not enough: a REPLAYED batch
         overwrites an already-committed dir in place with byte-identical
         rows, and a cached plan still references the pre-overwrite
         parquet files — correct while the persisted partitions live, but
@@ -132,15 +116,7 @@ class IngestPipeline:
         batch dir per poll — metadata the `_SUCCESS` intersection in
         _ready() already touches."""
         stamp = 0
-        roots = (
-            self.gate.out_dir,
-            self.langs_dir,
-            self.sigs_dir,
-            self.grams_dir,
-            self.cgrams_dir,
-            self.lines.out_dir,
-        )
-        for root in roots:
+        for root in (*self._flat_roots, self.lines.out_dir):
             for d in ids:
                 for dirpath, _dirs, files in os.walk(os.path.join(root, d)):
                     for f in files:
@@ -165,15 +141,9 @@ class IngestPipeline:
     def _ready(self) -> list[str]:
         from .ledger import committed_batch_ids, committed_nested_batch_ids
 
-        ids = (
-            committed_batch_ids(self.gate.out_dir)
-            & committed_batch_ids(self.langs_dir)
-            & committed_batch_ids(self.sigs_dir)
-            & committed_batch_ids(self.grams_dir)
-            & committed_batch_ids(self.cgrams_dir)
-            & committed_nested_batch_ids(
-                self.lines.out_dir, ("docs", "lines")
-            )
+        ids = set.intersection(
+            *(committed_batch_ids(root) for root in self._flat_roots),
+            committed_nested_batch_ids(self.lines.out_dir, ("docs", "lines")),
         )
         return sorted(ids)
 
@@ -192,20 +162,107 @@ class IngestPipeline:
             return None
         return self._read(spark, self.gate.out_dir, ids)
 
-    def sample(self, spark) -> DataFrame | None:
-        """The composed admission ledger —
-        operators/text.ingest_sample_from verbatim over the maintained
-        gated relations."""
-        from ..operators.text import ingest_sample_from
-
-        ids = self._ready()
-        if not ids:
-            return None
-        doc_langs = self._read(spark, self.langs_dir, ids)
-        ln = self._read(
-            spark, self.lines.out_dir, [f"{d}/lines" for d in ids]
+    def _stages(self, spark, ids: list[str], stages: tuple[str, ...]):
+        """The read-time composer: the selected `stages` of
+        operators/text.INGEST_STAGES over the committed batches `ids`,
+        as operators/text.ChainStages. The gate ran at arrival, so
+        `langs` holds the gate-kept documents and the `gate` field is
+        None (verdicts() reads the verdicts). The KN model, cluster
+        labels, keep-first verdicts and quotas are global decisions
+        and run here. The relations a wave's consumers read several
+        times go through the wave cache: the KN keep set, the cluster
+        losers (keyed by the chain they belong to) and, in the KN
+        chain, the admission input."""
+        from ..operators.dedup import (
+            _SIMHASH_BLOCKS,
+            dup_clusters_from,
+            simhash_block_pairs,
         )
-        return ingest_sample_from(doc_langs, ln)
+        from ..operators.text import (
+            CHAIN_STAGES,
+            ChainStages,
+            _kn_band_col,
+            admission_docs_from,
+            bigram_corpus_from,
+            check_stages,
+            kn_surprisal_from,
+            mixture_sample_from,
+        )
+
+        check_stages(stages)
+        # only the KN band and near-dup stages cache: the three-stage
+        # selection skips the mtime walk
+        optional = set(stages) - set(CHAIN_STAGES)
+        token = self._wave_token(ids) if optional else None
+        langs = keep = self._read(spark, self.langs_dir, ids)
+        kn_ids = nd_ids = None
+        if "kn_band" in stages:
+            # the model is trained on the gate-kept counts so far (their
+            # rollup IS the gated corpus counts)
+            def build_kn_ids() -> DataFrame:
+                per_doc = self._read(spark, self.grams_dir, ids)
+                corpus = bigram_corpus_from(per_doc)
+                scores = kn_surprisal_from(per_doc, corpus)
+                return (
+                    langs.select("doc_id")
+                    .join(scores, "doc_id", "left")
+                    .filter(_kn_band_col() == "keep")
+                    .select("doc_id")
+                )
+
+            kn_ids = self._cached("kn_ids", token, build_kn_ids)
+            keep = keep.join(kn_ids, "doc_id")
+        if "neardup_dedup" in stages:
+            # earlier losers mask the signatures BEFORE pairing (pairs
+            # among a subset are the subset's pairs)
+            def build_losers() -> DataFrame:
+                sigs = self._read(spark, self.sigs_dir, ids).select(
+                    "doc_id",
+                    *[f"blk{k}" for k in range(1, _SIMHASH_BLOCKS + 1)],
+                )
+                if kn_ids is not None:
+                    sigs = sigs.join(kn_ids, "doc_id")
+                return (
+                    dup_clusters_from(spark, simhash_block_pairs(sigs))
+                    .filter(F.col("doc_id") != F.col("cluster_id"))
+                    .select("doc_id")
+                )
+
+            tag = "kn" if kn_ids is not None else "nd"
+            losers = self._cached(f"{tag}_losers", token, build_losers)
+            keep = keep.join(losers, "doc_id", "left_anti")
+            nd_ids = keep.select("doc_id")
+
+        def build_admit() -> DataFrame:
+            ln = self._read(
+                spark, self.lines.out_dir, [f"{d}/lines" for d in ids]
+            )
+            if keep is not langs:
+                ln = ln.join(keep.select("doc_id"), "doc_id")
+            return admission_docs_from(keep, ln)
+
+        admit_docs = (
+            build_admit()
+            if kn_ids is None
+            else self._cached("kn_admit", token, build_admit)
+        )
+        return ChainStages(
+            None,
+            kn_ids,
+            nd_ids,
+            admit_docs,
+            mixture_sample_from(admit_docs),
+        )
+
+    def _sample(self, spark, stages: tuple[str, ...]) -> DataFrame | None:
+        ids = self._ready()
+        return self._stages(spark, ids, stages).sample if ids else None
+
+    def sample(self, spark) -> DataFrame | None:
+        """The three-stage admission ledger (docs_ingest_chain)."""
+        from ..operators.text import CHAIN_STAGES
+
+        return self._sample(spark, CHAIN_STAGES)
 
     def selected_docs(self, spark) -> DataFrame | None:
         s = self.sample(spark)
@@ -214,179 +271,46 @@ class IngestPipeline:
         return s.filter(F.col("selected")).select("doc_id")
 
     def sample_nd(self, spark) -> DataFrame | None:
-        """The FOUR-stage composed admission ledger (r11): gate →
-        near-dup cluster dedup → line dedup → admission — bit-equal to
-        the batch docs_ingest_chain_nd over the documents seen so far.
-        Cluster labels are recomputed at read time over the maintained
-        gate-kept signature relation (one late document can merge two
-        components and change which canonical survives), then the
-        loser set masks BOTH the admission inputs and the line
-        relation — a cluster loser contributes no lines to keep-first,
-        exactly as in the batch chain. The loser set (the expensive
-        pair-join + component-labeling output) is consumed once per
-        downstream branch, so it goes through the bounded wave cache
-        (r13 — the sample_kn()/audit() discipline applied here too: a
-        polling consumer re-paid the CC lineage per read and leaked
-        nothing, but paid ~2x)."""
-        from ..operators.dedup import (
-            _SIMHASH_BLOCKS,
-            dup_clusters_from,
-            simhash_block_pairs,
-        )
-        from ..operators.text import ingest_sample_from
+        """The four-stage admission ledger (docs_ingest_chain_nd):
+        cluster labels are recomputed at read time over the gate-kept
+        signatures (one late document can merge two components and
+        change which canonical survives), and the loser set masks both
+        the admission input and the line relation."""
+        from ..operators.text import CHAIN_ND_STAGES
 
-        ids = self._ready()
-        if not ids:
-            return None
-
-        def build_losers() -> DataFrame:
-            sigs = self._read(spark, self.sigs_dir, ids).select(
-                "doc_id",
-                *[f"blk{k}" for k in range(1, _SIMHASH_BLOCKS + 1)],
-            )
-            return (
-                dup_clusters_from(spark, simhash_block_pairs(sigs))
-                .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select("doc_id")
-            )
-
-        losers = self._cached("nd_losers", self._wave_token(ids), build_losers)
-        nd_langs = self._read(spark, self.langs_dir, ids).join(
-            losers, "doc_id", "left_anti"
-        )
-        ln = self._read(
-            spark, self.lines.out_dir, [f"{d}/lines" for d in ids]
-        ).join(nd_langs.select("doc_id"), "doc_id")
-        return ingest_sample_from(nd_langs, ln)
+        return self._sample(spark, CHAIN_ND_STAGES)
 
     def sample_kn(self, spark) -> DataFrame | None:
-        """The FIVE-stage composed admission ledger (r12, r11 verdict
-        ask #5): gate → KN band → near-dup cluster dedup → line dedup
-        → admission — bit-equal to the batch docs_ingest_chain_kn over
-        the documents seen so far. The KN model is a GLOBAL decision
-        trained on the GATED corpus-so-far (one late document moves
-        every p_kn and therefore every band verdict), so the scorer
-        runs at READ time over the maintained gate-kept per-doc bigram
-        counts (SUM-mergeable: their rollup IS the gated corpus
-        counts), exactly the ST21 pattern; then KN losers mask the
-        signature relation BEFORE pairing (pairs among a subset are
-        the subset's pairs), and cluster losers mask the admission
-        inputs and the line relation as in sample_nd()."""
-        from ..operators.text import mixture_sample_from
+        """The five-stage admission ledger (docs_ingest_chain_kn): the
+        KN model is retrained at read time on the gated corpus so far
+        (one late document moves every p_kn and so every band
+        verdict), then KN losers leave the signatures before pairing
+        and cluster losers leave the admission input."""
+        from ..operators.text import INGEST_STAGES
 
-        ids = self._ready()
-        if not ids:
-            return None
-        _kn_ids, _nd_ids, admit_docs = self._kn_stages(spark, ids)
-        return mixture_sample_from(admit_docs)
-
-    def _kn_stages(
-        self, spark, ids: list[str]
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """The five-stage chain's read-time stage relations over the
-        committed batch set — (kn_ids, nd_ids, admit_docs), shared by
-        sample_kn() and audit() so the admission ledger and the
-        attrition audit consume IDENTICAL stage sets. The three
-        multiply-consumed intermediates (the KN keep set: both pair
-        endpoints + the survivor semi-join; the CC loser set: the
-        expensive pair-join + component-labeling output; the admission
-        input: the post-line-dedup mass relation) go through the
-        bounded wave cache — persisted like the batch chain's
-        persist_stages mode, unpersisted when the committed set
-        moves."""
-        from ..operators.dedup import (
-            _SIMHASH_BLOCKS,
-            dup_clusters_from,
-            simhash_block_pairs,
-        )
-        from ..operators.text import (
-            _kn_band_col,
-            admission_docs_from,
-            bigram_corpus_from,
-            kn_surprisal_from,
-        )
-
-        token = self._wave_token(ids)
-        langs = self._read(spark, self.langs_dir, ids)
-
-        def build_kn_ids() -> DataFrame:
-            # the KN model is a GLOBAL decision trained on the GATED
-            # corpus-so-far (one late document moves every p_kn and
-            # therefore every band verdict): score at read time over
-            # the maintained gate-kept per-doc bigram counts
-            # (SUM-mergeable: their rollup IS the gated corpus counts)
-            per_doc = self._read(spark, self.grams_dir, ids)
-            scores = kn_surprisal_from(per_doc, bigram_corpus_from(per_doc))
-            return (
-                langs.select("doc_id")
-                .join(scores, "doc_id", "left")
-                .filter(_kn_band_col() == "keep")
-                .select("doc_id")
-            )
-
-        kn_ids = self._cached("kn_ids", token, build_kn_ids)
-
-        def build_losers() -> DataFrame:
-            # KN losers mask the signature relation BEFORE pairing
-            # (pairs among a subset are the subset's pairs), then
-            # cluster labels are a read-time global decision
-            sigs = (
-                self._read(spark, self.sigs_dir, ids)
-                .select(
-                    "doc_id",
-                    *[f"blk{k}" for k in range(1, _SIMHASH_BLOCKS + 1)],
-                )
-                .join(kn_ids, "doc_id")
-            )
-            return (
-                dup_clusters_from(spark, simhash_block_pairs(sigs))
-                .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select("doc_id")
-            )
-
-        losers = self._cached("kn_losers", token, build_losers)
-        kn_langs = langs.join(kn_ids, "doc_id").join(
-            losers, "doc_id", "left_anti"
-        )
-
-        def build_admit() -> DataFrame:
-            ln = self._read(
-                spark, self.lines.out_dir, [f"{d}/lines" for d in ids]
-            ).join(kn_langs.select("doc_id"), "doc_id")
-            return admission_docs_from(kn_langs, ln)
-
-        admit_docs = self._cached("kn_admit", token, build_admit)
-        return kn_ids, kn_langs.select("doc_id"), admit_docs
+        return self._sample(spark, INGEST_STAGES)
 
     def sample_contam(self, spark, bench_docs: DataFrame) -> DataFrame | None:
-        """The SIX-stage composed admission ledger (r14, r13 verdict
-        ask #4): gate → KN band → near-dup cluster dedup → line dedup
-        → admission → DECONTAMINATION — bit-equal to the batch
-        docs_ingest_chain_contam over the documents seen so far.
-        `bench_docs` is the benchmark (doc_id, text) relation — an
-        EXTERNAL fixed corpus supplied at read time, never part of the
-        stream (the batch anchor derives it from the corpus's src0
-        split; the bit-equality test feeds the same relation here).
-        Per-doc gram sets come from the maintained cgrams ledger
-        (arrival-time shingle is exact: grams are per-document
-        deterministic), the probe is contam_sample_from VERBATIM over
-        the same admission ledger sample_kn() emits, and the hits
-        relation goes through the bounded wave cache (the audit
-        consumes it too). The wave cache keys on the committed batch
-        set — a pipeline's benchmark is fixed for its lifetime, so
-        passing a DIFFERENT bench relation within one wave is
-        unsupported by the cache contract."""
+        """The six-stage admission ledger (docs_ingest_chain_contam):
+        the five-stage ledger through contam_sample_from. `bench_docs`
+        is the benchmark (doc_id, text) relation, an external fixed
+        corpus supplied at read time; per-doc gram sets come from the
+        cgrams ledger (grams are per-document deterministic, so the
+        arrival-time shingle is exact). The hits relation is
+        wave-cached and keyed by the committed batches only: a
+        pipeline's benchmark is fixed for its lifetime, and passing a
+        different one within a wave is unsupported."""
         from ..operators.text import (
+            INGEST_STAGES,
             bench_grams_of,
             contam_hits_from,
             contam_sample_from,
-            mixture_sample_from,
         )
 
         ids = self._ready()
         if not ids:
             return None
-        _kn_ids, _nd_ids, admit_docs = self._kn_stages(spark, ids)
+        sample = self._stages(spark, ids, INGEST_STAGES).sample
         hits = self._cached(
             "contam_hits",
             self._wave_token(ids),
@@ -395,28 +319,21 @@ class IngestPipeline:
                 bench_grams_of(bench_docs),
             ),
         )
-        return contam_sample_from(mixture_sample_from(admit_docs), hits)
+        return contam_sample_from(sample, hits)
 
     def audit(self, spark, bench_docs: DataFrame) -> DataFrame | None:
-        """The six-stage chain's stage-attrition table over the
-        documents seen so far (r13, r12 verdict ask #4; r14: the
-        decontam row — r13 ask #4) — bit-equal to the batch
-        docs_ingest_chain_audit by construction: the stage sets come
-        from the SAME read-time relations sample_kn()/sample_contam()
-        admit from (shared through _kn_stages, the contam hits cache
-        key, and the wave cache), and the seven-row rollup is
-        operators/text.ingest_audit_from VERBATIM. Raw mass comes
-        from the maintained gate verdict relation's own n_words (the
-        one relation kept for every document including gate-dropped
-        ones — why the audit needs no new ledger), the line_dedup/
-        admission rows report the admission input's kept-line mass,
-        and the decontam row the train set's mass, exactly as in
-        batch. `bench_docs` is the same external benchmark relation
-        sample_contam() takes."""
+        """The six-stage stage-attrition table
+        (docs_ingest_chain_audit): the stage sets are the five-stage
+        selection's relations that sample_kn()/sample_contam() admit
+        from (shared through the wave cache), and the rollup is
+        operators/text.ingest_audit_from. Raw mass comes from the
+        maintained gate verdicts' n_words — the one relation kept for
+        every document, gate-dropped ones included. `bench_docs` is
+        the benchmark relation sample_contam() takes."""
         from ..operators.text import (
+            INGEST_STAGES,
             audit_verdicts_from,
             ingest_audit_from,
-            mixture_sample_from,
         )
 
         ids = self._ready()
@@ -429,27 +346,24 @@ class IngestPipeline:
                 self._read(spark, self.gate.out_dir, ids)
             ),
         )
-        kn_ids, nd_ids, admit_docs = self._kn_stages(spark, ids)
+        st = self._stages(spark, ids, INGEST_STAGES)
         return ingest_audit_from(
             verdicts,
-            kn_ids,
-            nd_ids,
-            admit_docs,
-            mixture_sample_from(admit_docs),
+            st.kn_ids,
+            st.nd_ids,
+            st.admit_docs,
+            st.sample,
             self.sample_contam(spark, bench_docs),
         )
 
     def dedup(self, spark) -> DataFrame | None:
         """Line-dedup rollup of the gated corpus —
-        operators/dedup.c4_line_dedup_from verbatim (the ST17 surface,
-        restricted to the composed ready set). The rollup is the
-        polling consumer's whole read (keep-first min-struct agg +
-        join-back over every committed line), so it goes through the
-        bounded wave cache (r13 verdict ask #5 — the same rebuild
-        class the cache eliminated for sample_nd()/sample_kn()/
-        audit(): a second dedup() in the same wave reuses the
-        materialization; a new wave or a replayed overwrite bumps the
-        token and unpersists the stale entry)."""
+        operators/dedup.c4_line_dedup_from over the committed batches.
+        The rollup is a polling consumer's whole read (keep-first
+        min-struct agg + join-back over every committed line), so it
+        goes through the wave cache: a second dedup() in the same wave
+        reuses the materialization; a new wave or a replayed overwrite
+        bumps the token and unpersists the stale entry."""
         from ..operators.dedup import c4_line_dedup_from
 
         ids = self._ready()
@@ -469,7 +383,12 @@ class IngestPipeline:
 
     # -- the per-batch step -------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from ..operators.text import gopher_rules_df
+        from ..operators.dedup import _simhash_blocks_df
+        from ..operators.text import (
+            bigram_per_doc,
+            doc_grams_of,
+            gopher_rules_df,
+        )
 
         self.gate.process_batch(batch.select("doc_id", "text"), batch_id)
         # gate verdicts are per-document deterministic: filtering the
@@ -483,34 +402,22 @@ class IngestPipeline:
         kept.select("doc_id", "lang").write.mode("overwrite").parquet(
             os.path.join(self.langs_dir, f"batch={batch_id}")
         )
-        # gate-kept signature blocks (r11, the near-dup stage's input —
-        # operators/dedup._simhash_blocks_df VERBATIM, the corpus-scan
-        # cost amortized to arrival; cluster labels stay read-time)
-        from ..operators.dedup import _simhash_blocks_df
-
-        _simhash_blocks_df(kept.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.sigs_dir, f"batch={batch_id}"))
-        # gate-kept per-doc bigram counts (r12, the KN band stage's
-        # input — operators/text.bigram_per_doc VERBATIM, the ST21
-        # storage grain; the model stays a read-time decision)
-        from ..operators.text import bigram_per_doc
-
-        bigram_per_doc(kept.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.grams_dir, f"batch={batch_id}"))
-        # gate-kept distinct contamination 5-grams (r14, the
-        # decontamination stage's input — operators/text.doc_grams_of
-        # VERBATIM; the hit verdicts stay read-time because the
+        # the per-document inputs of the read-time stages, amortized to
+        # arrival: signature blocks (near-dup), per-doc bigram counts
+        # (KN band) and distinct contamination 5-grams (decontam; the
         # benchmark set is an external relation supplied at read)
-        from ..operators.text import doc_grams_of
-
-        doc_grams_of(kept.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.cgrams_dir, f"batch={batch_id}"))
+        text = kept.select("doc_id", "text")
+        for kernel, root in (
+            (_simhash_blocks_df, self.sigs_dir),
+            (bigram_per_doc, self.grams_dir),
+            (doc_grams_of, self.cgrams_dir),
+        ):
+            kernel(text).write.mode("overwrite").parquet(
+                os.path.join(root, f"batch={batch_id}")
+            )
         # lines land LAST: until they commit the batch is invisible to
         # every composed surface (the intersection rule above)
-        self.lines.process_batch(kept.select("doc_id", "text"), batch_id)
+        self.lines.process_batch(text, batch_id)
 
     def attach(
         self,

@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import dataclasses
 import datetime
-import glob
 import heapq
 import logging
 import os
@@ -69,6 +68,7 @@ from .deliver import (
     deliver_and_log,
     deliver_rows_per_event,
     delivery_lanes,
+    log_files,
     stage_dirs,
 )
 
@@ -322,17 +322,7 @@ class EventQueue:
 
     # ---- derived state (ST6 status machine as a view) ---------------
 
-    @staticmethod
-    def _log_files(path: str) -> list[str]:
-        # both layouts coexist: flat appends (direct calls, committed
-        # attempt files) and per-batch `batch=<id>` overwrite dirs
-        # (streaming sinks). Enumerating the files and reading the
-        # explicit list sidesteps partition discovery on the mixed
-        # layout and never surfaces a spurious `batch` column.
-        return sorted(
-            glob.glob(os.path.join(glob.escape(path), "*.parquet"))
-            + glob.glob(os.path.join(glob.escape(path), "batch=*", "*.parquet"))
-        )
+    _log_files = staticmethod(log_files)
 
     def _recover_crashed_swap(self, path: str) -> bool:
         """Heal a compact() swap that died in flight (cheap no-op when

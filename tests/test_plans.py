@@ -11,6 +11,8 @@ values stay correct.
 
 from __future__ import annotations
 
+import pytest
+
 from postgres_cdc_plugin_spark.operators import analytics, cdc, dedup, text
 from postgres_cdc_plugin_spark.plans import inspect
 
@@ -879,45 +881,70 @@ def test_family_builds_feed_their_consumers(spark, sf_dir):
         spark.catalog.clearCache()
 
 
-def test_audit_and_chain_share_the_kn_keep_plan(spark, sf_dir):
-    """The bench-pair cache contract (r13): the attrition audit's
-    persisted kn_ids must stay PLAN-IDENTICAL to the chain's, or the
-    chain (which runs right after the audit in the bench's
-    alphabetical order) loses its session-cache hit and re-pays the
-    KN scoring pass — a +2.6s bench drift when an r13 refactor cut
-    kept_ids' lineage inside the audit and silently forked the plans.
-    sameSemantics is exactly the CacheManager matching criterion.
-    localCheckpoint is patched to a no-op so the audit-mode lineage
-    cuts don't replace the comparable plan with an opaque RDD scan."""
+def test_audit_and_chain_share_the_kn_keep_plan(spark, sf_dir, monkeypatch):
+    """The bench-pair cache contract: the attrition audit's persisted
+    kn_ids must stay PLAN-IDENTICAL to the chain's, or the chain
+    (which runs right after the audit in the bench's alphabetical
+    order) loses its session-cache hit and re-pays the KN scoring pass
+    — a +2.6s bench drift when a refactor cut kept_ids' lineage inside
+    the audit and silently forked the plans. sameSemantics is exactly
+    the CacheManager matching criterion. Both sides are captured from
+    the registered queries' own code paths (docs_ingest_chain_audit
+    and docs_ingest_chain_contam). localCheckpoint is patched to a
+    no-op so the audit-mode lineage cuts don't replace the comparable
+    plan with an opaque RDD scan; both pinned relations sit upstream of
+    the near-dup stage, so its iterative component labeling is stubbed
+    with a lazy projection."""
+    from pyspark.sql import functions as F
     from pyspark.sql.classic.dataframe import DataFrame as _DF
 
-    from postgres_cdc_plugin_spark.operators.text import (
-        _contam_hits_gated,
-        ingest_chain_kn_stages,
-    )
-    from postgres_cdc_plugin_spark.session import load
+    from postgres_cdc_plugin_spark.operators.text import chains
 
-    full = load(spark, sf_dir, "documents")
-    docs = full.select("doc_id", "text", "lang")
-    bench = full.filter("source = 'src0'").select("doc_id", "text")
+    monkeypatch.setattr(
+        dedup,
+        "dup_clusters_from",
+        lambda spark, pairs: pairs.select(
+            F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("cluster_id")
+        ),
+    )
+
+    seen: dict[str, list] = {"hits": [], "stages": [], "rollup": []}
+
+    def record(name, key, pick, real=None):
+        real = real or getattr(chains, name)
+
+        def wrapped(*args, **kwargs):
+            out = real(*args, **kwargs)
+            seen[key].append(pick(args, out))
+            return out
+
+        monkeypatch.setattr(chains, name, wrapped)
+
+    record("_contam_hits_gated", "hits", lambda args, out: out)
+    record("ingest_chain_stages", "stages", lambda args, out: out.kn_ids)
+    # the audit's rollup over its stage relations is not pinned here:
+    # record its kn_ids input without analyzing the seven-branch union
+    record(
+        "ingest_audit_from", "rollup", lambda args, out: args[1],
+        real=lambda *args: args[0],
+    )
     real_ckpt = _DF.localCheckpoint
     _DF.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
     try:
-        gate_audit, kn_audit, _, _, _ = ingest_chain_kn_stages(
-            docs, persist_stages=True
-        )
-        gate_chain, kn_chain, _, _, _ = ingest_chain_kn_stages(docs)
+        chains.docs_ingest_chain_audit(spark, sf_dir)
+        (hits_audit,), (kn_audit,) = seen["hits"], seen["rollup"]
+        assert not seen["stages"]  # the audit walks the chain itself
+        chains.docs_ingest_chain_contam(spark, sf_dir)
+        (_, hits_chain), (kn_chain,) = seen["hits"], seen["stages"]
         assert kn_audit.sameSemantics(kn_chain), (
             "audit-mode kn_ids plan forked from the chain's — the "
             "bench pair no longer shares one KN scoring pass"
         )
-        # the same contract one stage later (r14): the decontam hits
-        # relation must be plan-identical between the six-stage chain
-        # and the audit, or the bench pair pays the gram-explode +
-        # broadcast probe twice (_contam_hits_gated builds from the
-        # UNCUT gate plan in both modes for exactly this reason)
-        hits_audit = _contam_hits_gated(docs, gate_audit, bench)
-        hits_chain = _contam_hits_gated(docs, gate_chain, bench)
+        # the same contract one stage later: the decontam hits relation
+        # must be plan-identical between the six-stage chain and the
+        # audit, or the bench pair pays the gram-explode + broadcast
+        # probe twice (_contam_hits_gated builds from the UNCUT gate
+        # plan in both modes for exactly this reason)
         assert hits_audit.sameSemantics(hits_chain), (
             "audit-mode contam hits plan forked from the chain's — "
             "the bench pair no longer shares one decontamination pass"
@@ -925,6 +952,57 @@ def test_audit_and_chain_share_the_kn_keep_plan(spark, sf_dir):
     finally:
         _DF.localCheckpoint = real_ckpt  # type: ignore[method-assign]
         spark.catalog.clearCache()
+
+
+def test_ingest_chain_selections_are_ordered_subsets():
+    """Every chain is an ordered selection of the one stage list that
+    keeps the gate, line dedup and admission; the composers reject
+    anything else instead of silently running a different chain."""
+    from postgres_cdc_plugin_spark.operators.text import (
+        CHAIN_ND_STAGES,
+        CHAIN_STAGES,
+        INGEST_STAGES,
+        check_stages,
+    )
+
+    for stages in (CHAIN_STAGES, CHAIN_ND_STAGES, INGEST_STAGES):
+        check_stages(stages)
+    for bad in (
+        ("gopher_gate", "neardup_dedup", "kn_band", "line_dedup",
+         "admission"),
+        ("gopher_gate", "kn_band", "admission"),
+        ("kn_band", "line_dedup", "admission"),
+    ):
+        with pytest.raises(ValueError):
+            check_stages(bad)
+
+
+def test_audit_side_thread_keeps_the_callers_job_group(spark, sf_dir):
+    """docs_ingest_chain_audit materializes the gate verdicts and the
+    decontam hits on a second Python thread. That thread must carry
+    the caller's local properties: under pinned-thread mode a plain
+    thread's jobs run outside the caller's job group, so cancelling the
+    group would leave them running."""
+    from postgres_cdc_plugin_spark.operators.text import (
+        docs_ingest_chain_audit,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ingest-audit", "audit under a caller's job group")
+    try:
+        docs_ingest_chain_audit(spark, sf_dir).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        spark.catalog.clearCache()
+    bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("ingest-audit")
+    assert not set(tracker.getJobIdsForGroup(None)) - before
 
 
 def test_c4_line_filter_is_zero_shuffle(spark, sf_dir):
@@ -1033,11 +1111,13 @@ def test_spread_scan_by_arms(spark, sf_dir):
 
 
 def test_spread_scan_skips_non_scan_rooted(spark, sf_dir):
-    """session.spread_scan (r15 advice fix): a joined/aggregated input
-    must take the identity arm WITHOUT probing df.rdd — under AQE the
-    probe would eagerly execute the upstream shuffle stages at
-    plan-construction time. Scan-rooted behavior is unchanged (the
-    both-arms pin in test_self_repetition_strip_is_shuffle_free)."""
+    """session.spread_scan: a joined/aggregated/distinct input must
+    take the identity arm WITHOUT probing df.rdd — under AQE the probe
+    would eagerly execute the upstream shuffle stages at
+    plan-construction time. The check reads the analyzed plan's node
+    names, so a scan-rooted relation whose column name contains a
+    blocked token ('Join') still takes the spread arm (the both-arms
+    pin is test_self_repetition_strip_is_shuffle_free)."""
     from pyspark.sql import functions as F
 
     from postgres_cdc_plugin_spark.session import load, spread_scan
@@ -1048,3 +1128,9 @@ def test_spread_scan_skips_non_scan_rooted(spark, sf_dir):
     joined = docs.join(docs.withColumnRenamed("doc_id", "d2"),
                        docs.doc_id == F.col("d2"))
     assert spread_scan(joined, "doc_id") is joined
+    distinct = docs.distinct()
+    assert spread_scan(distinct, "doc_id") is distinct
+    named = docs.select("doc_id", F.col("doc_id").alias("id_Join_Sort"))
+    assert named.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    spread = spread_scan(named, "doc_id")
+    assert "REPARTITION_BY_NUM" in inspect.physical_plan(spread)

@@ -360,7 +360,7 @@ def test_word_pmi_known_associations(spark):
 
 def test_ingest_chain_audit_agrees_with_the_chain(spark, sf_dir):
     """The stage-attrition audit and the six-stage chain must never
-    disagree about who survived (they share ingest_chain_kn_stages +
+    disagree about who survived (they share ingest_chain_stages +
     contam_sample_from — this pins the contract against a refactor
     that forks them): the admission row's n_docs equals the chain's
     selected count, the decontam row equals the six-stage ledger's

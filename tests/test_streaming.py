@@ -3529,8 +3529,9 @@ def test_ingest_pipeline_checkpoint_resume_respects_gate(
     import os
 
     from postgres_cdc_plugin_spark.operators.text import (
+        CHAIN_STAGES,
         gopher_rules_df,
-        ingest_chain_from,
+        ingest_chain_stages,
     )
     from postgres_cdc_plugin_spark.session import load
     from postgres_cdc_plugin_spark.streaming.ingest import (
@@ -3556,14 +3557,18 @@ def test_ingest_pipeline_checkpoint_resume_respects_gate(
         return sorted(map(tuple, df.collect()))
 
     drain()
-    assert snap(pipe.sample(spark)) == snap(ingest_chain_from(wave1))
+    assert snap(pipe.sample(spark)) == snap(
+        ingest_chain_stages(wave1, CHAIN_STAGES).sample
+    )
 
     n_before = len(
         [d for d in os.listdir(pipe.langs_dir) if d.startswith("batch=")]
     )
     wave2.coalesce(1).write.mode("append").parquet(feed)
     drain()
-    assert snap(pipe.sample(spark)) == snap(ingest_chain_from(docs))
+    assert snap(pipe.sample(spark)) == snap(
+        ingest_chain_stages(docs, CHAIN_STAGES).sample
+    )
     # the resumed stream landed only the new files
     assert (
         len([d for d in os.listdir(pipe.langs_dir) if d.startswith("batch=")])
@@ -3791,8 +3796,9 @@ def test_ingest_pipeline_nd_bit_equal_with_resume(spark, tmp_path, sf_dir):
     admission is a (weak) subset-shift of the three-stage one on the
     same corpus (losers' token mass moved every quota)."""
     from postgres_cdc_plugin_spark.operators.text import (
+        CHAIN_ND_STAGES,
         docs_ingest_chain_nd,
-        ingest_chain_nd_from,
+        ingest_chain_stages,
     )
     from postgres_cdc_plugin_spark.session import load
     from postgres_cdc_plugin_spark.streaming.ingest import (
@@ -3816,7 +3822,7 @@ def test_ingest_pipeline_nd_bit_equal_with_resume(spark, tmp_path, sf_dir):
         return sorted(map(tuple, df.collect()))
 
     drain()
-    w1 = snap(ingest_chain_nd_from(wave1))
+    w1 = snap(ingest_chain_stages(wave1, CHAIN_ND_STAGES).sample)
     assert snap(pipe.sample_nd(spark)) == w1
 
     docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(
@@ -3851,8 +3857,9 @@ def test_ingest_pipeline_kn_bit_equal_with_resume(spark, tmp_path, sf_dir):
     chain (its canonical was band-dropped) — and the KN band really
     dropped documents the near-dup stage had kept."""
     from postgres_cdc_plugin_spark.operators.text import (
+        INGEST_STAGES,
         docs_ingest_chain_kn,
-        ingest_chain_kn_from,
+        ingest_chain_stages,
     )
     from postgres_cdc_plugin_spark.session import load
     from postgres_cdc_plugin_spark.streaming.ingest import (
@@ -3876,7 +3883,7 @@ def test_ingest_pipeline_kn_bit_equal_with_resume(spark, tmp_path, sf_dir):
         return sorted(map(tuple, df.collect()))
 
     drain()
-    w1 = snap(ingest_chain_kn_from(wave1))
+    w1 = snap(ingest_chain_stages(wave1, INGEST_STAGES).sample)
     assert snap(pipe.sample_kn(spark)) == w1
 
     docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(
@@ -3915,8 +3922,11 @@ def test_ingest_pipeline_contam_bit_equal_to_batch_chain(
     strict (decontam has teeth), and no benchmark-split document is
     ever in train (its grams ARE benchmark grams — uniform probe)."""
     from postgres_cdc_plugin_spark.operators.text import (
+        INGEST_STAGES,
+        _contam_hits_gated,
+        contam_sample_from,
         docs_ingest_chain_contam,
-        ingest_chain_contam_from,
+        ingest_chain_stages,
     )
     from postgres_cdc_plugin_spark.session import load
     from postgres_cdc_plugin_spark.streaming.ingest import (
@@ -3942,7 +3952,12 @@ def test_ingest_pipeline_contam_bit_equal_to_batch_chain(
         return sorted(map(tuple, df.collect()))
 
     drain()
-    w1 = snap(ingest_chain_contam_from(wave1, bench))
+    st = ingest_chain_stages(wave1, INGEST_STAGES)
+    w1 = snap(
+        contam_sample_from(
+            st.sample, _contam_hits_gated(wave1, st.gate, bench)
+        )
+    )
     assert snap(pipe.sample_contam(spark, bench)) == w1
 
     docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(
@@ -4044,12 +4059,13 @@ def test_ingest_pipeline_audit_bit_equal_with_resume(spark, tmp_path, sf_dir):
     admission row counts exactly sample_kn()'s selected set (the two
     consumers share the wave-cached stage relations)."""
     from postgres_cdc_plugin_spark.operators.text import (
+        INGEST_STAGES,
         _contam_hits_gated,
         audit_verdicts_from,
         contam_sample_from,
         docs_ingest_chain_audit,
         ingest_audit_from,
-        ingest_chain_kn_stages,
+        ingest_chain_stages,
     )
     from postgres_cdc_plugin_spark.session import load
     from postgres_cdc_plugin_spark.streaming.ingest import (
@@ -4081,7 +4097,9 @@ def test_ingest_pipeline_audit_bit_equal_with_resume(spark, tmp_path, sf_dir):
     )
 
     drain()
-    gate, kn_ids, nd_ids, admit, sample = ingest_chain_kn_stages(wave1)
+    gate, kn_ids, nd_ids, admit, sample = ingest_chain_stages(
+        wave1, INGEST_STAGES
+    )
     final = contam_sample_from(
         sample, _contam_hits_gated(wave1, gate, bench)
     )
