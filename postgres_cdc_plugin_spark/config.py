@@ -79,9 +79,16 @@ class SubscriptionConfig:
         return self.retry_number + 1
 
     def backoff_delay(self, attempt: int) -> int:
-        """Delay before retry `attempt` (0-based), seconds.
-        LINEAR: constant; EXPONENTIAL: interval * 2^attempt via left shift
-        — exactly src/cdc_webhook.c:103-109."""
-        if self.retry_backoff == "LINEAR":
-            return self.retry_interval
-        return self.retry_interval * (1 << attempt)
+        """Delay before retry `attempt` (0-based), seconds: see
+        backoff_seconds."""
+        return backoff_seconds(self.retry_backoff, self.retry_interval, attempt)
+
+
+def backoff_seconds(backoff: str, interval: int, attempt: int) -> int:
+    """Delay before retry `attempt` (0-based), seconds. LINEAR: constant;
+    EXPONENTIAL: interval * 2^attempt via left shift — exactly
+    src/cdc_webhook.c:103-109. functions.scalar.backoff_delay is the
+    same rule as a Column expression (the queue fold's)."""
+    if backoff == "LINEAR":
+        return interval
+    return interval * (1 << attempt)

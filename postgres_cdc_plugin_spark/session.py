@@ -16,6 +16,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+_MAX_DRIVER_HEAP_MB = 32 * 1024
+
+
+def default_driver_memory() -> str:
+    """spark.driver.memory when SPARK_GRAFT_DRIVER_MEM is unset: half of
+    the machine's physical memory, at most 32g. A heap cap above what
+    the machine has lets the JVM keep growing instead of collecting
+    until the kernel kills it; half leaves room for the Python workers
+    and the JVM's off-heap memory. Where physical memory cannot be read,
+    the cap itself."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "32g"
+    half_mb = phys // 2 // 2**20
+    return "32g" if half_mb >= _MAX_DRIVER_HEAP_MB else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = "postgres-cdc-plugin-spark",
     master: str | None = None,
@@ -48,7 +66,8 @@ def get_spark(
         # JVM launch — harmless on an already-running session.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(),
         )
     )
     # Cluster profile (r15, guide §9), OFF by default so the local

@@ -189,23 +189,18 @@ def stream_ingest(
     both sinks; a two-query split would scan the input twice). Returns
     the started StreamingQuery.
 
-    foreachBatch is at-least-once, so each batch writes mode-overwrite
-    into its OWN `batch=<id>` partition directory (the
-    SimHashNearDupIndex discipline): a replayed micro-batch rewrites
-    its partition instead of appending duplicates, making the sinks
-    effectively exactly-once. Readers see `batch` as an ordinary
-    partition column on top of the canonical schema."""
-    import os
+    foreachBatch is at-least-once, so each batch lands in both dirs
+    through the ledger landing rule (streaming/ledger.land): its OWN
+    `batch=<id>` partition directory, overwritten on replay, so the
+    sinks are effectively exactly-once. Readers see `batch` as an
+    ordinary partition column on top of the canonical schema."""
+    from ..streaming.ledger import land
 
     def _route(batch: DataFrame, batch_id: int) -> None:
         batch = batch.cache()
         clean, quarantine = split_quarantine(batch)
-        clean.write.mode("overwrite").parquet(
-            os.path.join(clean_dir, f"batch={batch_id}")
-        )
-        quarantine.write.mode("overwrite").parquet(
-            os.path.join(quarantine_dir, f"batch={batch_id}")
-        )
+        land(clean, clean_dir, batch_id)
+        land(quarantine, quarantine_dir, batch_id)
         batch.unpersist()
 
     writer = (

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ledger import Ledger, committed_batches, land, read
+
 DOC_STREAM_SCHEMA = "doc_id bigint, text string, lang string, ts timestamp"
 
 
@@ -81,7 +83,7 @@ def ingest_stream(
     )
 
 
-class SimHashNearDupIndex:
+class SimHashNearDupIndex(Ledger):
     """Online near-duplicate filter: SimHash block-LSH against a
     persisted signature index, run per micro-batch via foreachBatch.
 
@@ -99,22 +101,18 @@ class SimHashNearDupIndex:
     a band-bucket join, not per-key lookup, and signatures are 4 ints/
     doc — ~32 bytes/doc plus the id, so a 10^10-doc corpus indexes in
     the hundreds of GB, a small parquet relation by Spark standards.
-    Writes go to `batch=<id>` partition directories with overwrite, so
-    a replayed micro-batch rewrites its own partition instead of
-    duplicating it, and the index read for batch N sees only
-    partitions < N — a failed attempt's partial writes are both
-    invisible to the re-run and overwritten by it (exactly-once
-    output from at-least-once execution, the same write-then-swap
-    discipline as EventQueue.compact). At 100 TB the per-batch cost is
-    one shuffle of (band, key, doc_id) pairs; the index side would be
-    bucketed by band key on disk and periodically compacted.
+    Both relations are ledger batches (streaming/ledger.py); the index
+    read for batch N sees only committed batches < N, so a failed
+    attempt's partial writes are invisible to the re-run and
+    overwritten by it. At 100 TB the per-batch cost is one shuffle of
+    (band, key, doc_id) pairs; the index side would be bucketed by band
+    key on disk and periodically compacted.
     """
 
     def __init__(self, index_dir: str, out_dir: str):
+        super().__init__(out_dir)
         self.index_dir = index_dir
-        self.out_dir = out_dir
         os.makedirs(index_dir, exist_ok=True)
-        os.makedirs(out_dir, exist_ok=True)
 
     # -- read-back surfaces -------------------------------------------
     def index(self, spark) -> DataFrame:
@@ -127,31 +125,17 @@ class SimHashNearDupIndex:
 
     def _read_parts(self, spark, root: str, below: int | None = None):
         # a batch is visible only when BOTH its signature-index and its
-        # accepted-docs jobs committed (streaming/ledger.py): a crash
-        # between the two writes must not let read-backs see signatures
-        # for documents the accepted relation doesn't carry (the
-        # checkpoint replays the torn batch and overwrites both).
-        # Stream order guarantees every batch below the one being
-        # replayed is complete, so the internal below=batch_id index
-        # read loses nothing.
-        from .ledger import committed_batch_ids
-
-        ready = committed_batch_ids(self.index_dir) & committed_batch_ids(
-            self.out_dir
-        )
-        parts = sorted(
-            d for d in ready
+        # accepted-docs jobs committed: a crash between the two writes
+        # must not let read-backs see signatures for documents the
+        # accepted relation doesn't carry. Stream order guarantees every
+        # batch below the one being replayed is complete, so the
+        # internal below=batch_id index read loses nothing.
+        ids = [
+            d
+            for d in committed_batches(self.index_dir, self.out_dir).ids
             if below is None or int(d.split("=", 1)[1]) < below
-        )
-        if not parts:
-            return None
-        df = spark.read.option("basePath", root).parquet(
-            *[os.path.join(root, d) for d in parts]
-        )
-        # refreshByPath: Spark caches per-path file listings, and the
-        # index path gains files every batch
-        spark.catalog.refreshByPath(root)
-        return df
+        ]
+        return read(spark, root, ids, keep_batch=True)
 
     # -- the per-batch step -------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -220,28 +204,5 @@ class SimHashNearDupIndex:
         )
         novel_blocks = blocks.join(losers, "doc_id", "left_anti")
         novel_docs = batch.join(losers, "doc_id", "left_anti")
-        novel_blocks.write.mode("overwrite").parquet(
-            os.path.join(self.index_dir, f"batch={batch_id}")
-        )
-        novel_docs.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        accepted_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the filter over a (typically ingest_stream-gated) doc
-        stream; returns the StreamingQuery. `available_now=True` drains
-        everything currently in the source and terminates — the
-        catch-up / backfill mode (and the deterministic test mode)."""
-        writer = (
-            accepted_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(novel_blocks, self.index_dir, batch_id)
+        land(novel_docs, self.out_dir, batch_id)

@@ -4,12 +4,11 @@ streaming/vectors.py's index maintainer.
 The batch events_dau_wau_mau computes DAU/WAU/MAU from the whole event
 log at once; a production engagement dashboard receives events
 continuously. ActiveUsersLedger keeps the DISTINCT (user_id, day)
-relation live — each micro-batch's user-days land in a `batch=<id>`
-directory (overwritten on replay: exactly-once output from
-at-least-once foreachBatch, the house discipline) — and the read-back
-runs operators.analytics.active_users_rolling VERBATIM over the
-deduplicated union, so the streaming surface is bit-equal to the batch
-query given the same event log (pinned in tests/test_streaming.py).
+relation live — each micro-batch's user-days land as one ledger batch
+(streaming/ledger.py) — and the read-back runs
+operators.analytics.active_users_rolling VERBATIM over the deduplicated
+union, so the streaming surface is bit-equal to the batch query given
+the same event log (pinned in tests/test_streaming.py).
 
 Scale shape per batch: one batch-sized distinct on (user, day); the
 stored relation is user-day grain — orders of magnitude below the
@@ -19,35 +18,25 @@ duplicates a user active on the same day in two batches creates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ledger import Ledger, committed_batches, land, read
 
 EVENT_STREAM_SCHEMA = "event_id bigint, ts timestamp, user_id bigint"
 
 
-class ActiveUsersLedger:
+class ActiveUsersLedger(Ledger):
     """Maintains the distinct user-day relation under `out_dir` from a
     streaming event feed; `rolling()` reports exact DAU/WAU/MAU per day
     through the batch kernel."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        os.makedirs(out_dir, exist_ok=True)
-
     # -- read-back surfaces -------------------------------------------
     def user_days(self, spark) -> DataFrame | None:
-        from .ledger import committed_batch_dirs
-
-        parts = committed_batch_dirs(self.out_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
-        raw = spark.read.option("basePath", self.out_dir).parquet(*parts)
         # a user active the same day in two micro-batches appears in
         # both batch dirs — the ledger's grain is the DISTINCT user-day
-        return raw.select("user_id", "day").distinct()
+        ids = committed_batches(self.out_dir).ids
+        return read(spark, self.out_dir, ids, distinct=True)
 
     def rolling(self, spark) -> DataFrame | None:
         """Exact DAU/WAU/MAU per day over the maintained relation — the
@@ -68,24 +57,4 @@ class ActiveUsersLedger:
         ud = batch.select(
             "user_id", F.date_trunc("day", F.col("ts")).alias("day")
         ).distinct()
-        ud.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        event_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the ledger over a streaming event feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            event_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(ud, self.out_dir, batch_id)

@@ -37,12 +37,11 @@ kernels the batch composer uses, so bit-equality holds by
 construction; tests/test_streaming.py pins it together with replay
 idempotence and checkpoint resume.
 
-Atomic visibility across the six roots: a batch is readable only when
-gate, langs, sigs, grams, cgrams and both line relations committed
-(`_SUCCESS` witnesses intersected — streaming/ledger.py, including the
-loud marker-disabled failure). A crash between two sub-writes leaves
-the batch invisible to every composed surface; the checkpoint replays
-it and the overwrites complete it all-or-nothing.
+Every relation above is a ledger relation (streaming/ledger.py): a
+batch is readable only once all six roots, both line relations
+included, committed it. A crash between two sub-writes leaves the
+batch invisible to every composed surface; the checkpoint replays it
+and the overwrites complete it all-or-nothing.
 
 Scale shape per batch: the gate is a zero-shuffle lambda projection;
 the line explode is the relation line dedup pays anyway, amortized to
@@ -56,13 +55,14 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from .ledger import Ledger, Wave, committed_batches, land, read
 from .lines import C4LineLedger
 from .quality import GopherQualityLedger
 
 INGEST_STREAM_SCHEMA = "doc_id bigint, text string, lang string"
 
 
-class IngestPipeline:
+class IngestPipeline(Ledger):
     """The ingest chain over a streaming document feed. `sample()`,
     `sample_nd()`, `sample_kn()` and `sample_contam()` are the three- to
     six-stage chain relations over every document seen so far (the
@@ -73,7 +73,7 @@ class IngestPipeline:
     batches only."""
 
     def __init__(self, out_dir: str):
-        self.out_dir = out_dir
+        super().__init__(out_dir)
         self.gate = GopherQualityLedger(os.path.join(out_dir, "gate"))
         self.lines = C4LineLedger(os.path.join(out_dir, "lines"))
         self.langs_dir = os.path.join(out_dir, "langs")
@@ -92,79 +92,43 @@ class IngestPipeline:
             os.makedirs(d, exist_ok=True)
         # per-key bounded persist cache for read-time intermediates
         # consumed several times within one wave (kn keep set, cluster
-        # losers, admission input, line-dedup rollup): keyed by the
-        # committed batch-id set PLUS a file-mtime fingerprint
-        # (_wave_token), so a same-wave second consumer (audit() after
-        # sample_kn()) reuses the materialization, while a new wave or
-        # a replayed in-place overwrite unpersists the stale entry
-        # first — a polling consumer never leaks cache entries and
-        # never serves a plan over replaced files
-        self._wave_cache: dict[
-            str, tuple[tuple[tuple[str, ...], int], DataFrame]
-        ] = {}
+        # losers, admission input, line-dedup rollup), keyed by the
+        # Wave of the listing that decided visibility. Its commit stamp
+        # moves on every in-place replay, so a replayed overwrite of an
+        # already-committed batch (same ids, new files) rebinds the key
+        # too: a cached plan over the replaced files would hit
+        # FileNotFoundException on a recompute after eviction. The
+        # stale entry is unpersisted first, so a polling consumer never
+        # leaks cache entries.
+        self._wave_cache: dict[str, tuple[Wave, DataFrame]] = {}
 
-    def _wave_token(self, ids: list[str]) -> tuple[tuple[str, ...], int]:
-        """Cache key for the committed wave: the batch-id set PLUS the
-        max file mtime_ns across those batches' dirs in every root. The
-        id set alone is not enough: a REPLAYED batch
-        overwrites an already-committed dir in place with byte-identical
-        rows, and a cached plan still references the pre-overwrite
-        parquet files — correct while the persisted partitions live, but
-        a recompute after cache eviction would hit FileNotFoundException.
-        The overwrite bumps mtimes, so folding them into the key re-reads
-        (and re-persists) after any replay. Cost: one shallow scandir per
-        batch dir per poll — metadata the `_SUCCESS` intersection in
-        _ready() already touches."""
-        stamp = 0
-        for root in (*self._flat_roots, self.lines.out_dir):
-            for d in ids:
-                for dirpath, _dirs, files in os.walk(os.path.join(root, d)):
-                    for f in files:
-                        try:
-                            st = os.stat(os.path.join(dirpath, f))
-                        except OSError:
-                            continue
-                        stamp = max(stamp, st.st_mtime_ns)
-        return tuple(ids), stamp
-
-    def _cached(self, key: str, token, build) -> DataFrame:
+    def _cached(self, key: str, wave: Wave, build) -> DataFrame:
         prev = self._wave_cache.get(key)
-        if prev is not None and prev[0] == token:
+        if prev is not None and prev[0] == wave:
             return prev[1]
         if prev is not None:
             prev[1].unpersist()
         df = build().persist()
-        self._wave_cache[key] = (token, df)
+        self._wave_cache[key] = (wave, df)
         return df
 
     # -- composed visibility ------------------------------------------
-    def _ready(self) -> list[str]:
-        from .ledger import committed_batch_ids, committed_nested_batch_ids
-
-        ids = set.intersection(
-            *(committed_batch_ids(root) for root in self._flat_roots),
-            committed_nested_batch_ids(self.lines.out_dir, ("docs", "lines")),
+    def _wave(self) -> Wave:
+        """The one listing each public read-back makes."""
+        return committed_batches(
+            *self._flat_roots, nested={self.lines.out_dir: C4LineLedger.SUBS}
         )
-        return sorted(ids)
 
-    def _read(self, spark, root: str, ids: list[str]) -> DataFrame:
-        spark.catalog.refreshByPath(root)
-        # redelivered docs appear in several batch dirs with identical
-        # (deterministic) rows — distinct restores grain
-        return spark.read.parquet(
-            *(os.path.join(root, d) for d in ids)
-        ).distinct()
+    def _read(self, spark, root: str, wave: Wave, sub: str = "") -> DataFrame:
+        return read(spark, root, wave.ids, sub=sub, distinct=True)
 
     # -- read-back surfaces -------------------------------------------
     def verdicts(self, spark) -> DataFrame | None:
-        ids = self._ready()
-        if not ids:
-            return None
-        return self._read(spark, self.gate.out_dir, ids)
+        return self._read(spark, self.gate.out_dir, self._wave())
 
-    def _stages(self, spark, ids: list[str], stages: tuple[str, ...]):
+    def _stages(self, spark, wave: Wave, stages: tuple[str, ...]):
         """The read-time composer: the selected `stages` of
-        operators/text.INGEST_STAGES over the committed batches `ids`,
+        operators/text.INGEST_STAGES over the committed batches of `wave`,
         as operators/text.ChainStages. The gate ran at arrival, so
         `langs` holds the gate-kept documents and the `gate` field is
         None (verdicts() reads the verdicts). The KN model, cluster
@@ -179,7 +143,6 @@ class IngestPipeline:
             simhash_block_pairs,
         )
         from ..operators.text import (
-            CHAIN_STAGES,
             ChainStages,
             _kn_band_col,
             admission_docs_from,
@@ -190,17 +153,13 @@ class IngestPipeline:
         )
 
         check_stages(stages)
-        # only the KN band and near-dup stages cache: the three-stage
-        # selection skips the mtime walk
-        optional = set(stages) - set(CHAIN_STAGES)
-        token = self._wave_token(ids) if optional else None
-        langs = keep = self._read(spark, self.langs_dir, ids)
+        langs = keep = self._read(spark, self.langs_dir, wave)
         kn_ids = nd_ids = None
         if "kn_band" in stages:
             # the model is trained on the gate-kept counts so far (their
             # rollup IS the gated corpus counts)
             def build_kn_ids() -> DataFrame:
-                per_doc = self._read(spark, self.grams_dir, ids)
+                per_doc = self._read(spark, self.grams_dir, wave)
                 corpus = bigram_corpus_from(per_doc)
                 scores = kn_surprisal_from(per_doc, corpus)
                 return (
@@ -210,13 +169,13 @@ class IngestPipeline:
                     .select("doc_id")
                 )
 
-            kn_ids = self._cached("kn_ids", token, build_kn_ids)
+            kn_ids = self._cached("kn_ids", wave, build_kn_ids)
             keep = keep.join(kn_ids, "doc_id")
         if "neardup_dedup" in stages:
             # earlier losers mask the signatures BEFORE pairing (pairs
             # among a subset are the subset's pairs)
             def build_losers() -> DataFrame:
-                sigs = self._read(spark, self.sigs_dir, ids).select(
+                sigs = self._read(spark, self.sigs_dir, wave).select(
                     "doc_id",
                     *[f"blk{k}" for k in range(1, _SIMHASH_BLOCKS + 1)],
                 )
@@ -229,14 +188,12 @@ class IngestPipeline:
                 )
 
             tag = "kn" if kn_ids is not None else "nd"
-            losers = self._cached(f"{tag}_losers", token, build_losers)
+            losers = self._cached(f"{tag}_losers", wave, build_losers)
             keep = keep.join(losers, "doc_id", "left_anti")
             nd_ids = keep.select("doc_id")
 
         def build_admit() -> DataFrame:
-            ln = self._read(
-                spark, self.lines.out_dir, [f"{d}/lines" for d in ids]
-            )
+            ln = self._read(spark, self.lines.out_dir, wave, sub="lines")
             if keep is not langs:
                 ln = ln.join(keep.select("doc_id"), "doc_id")
             return admission_docs_from(keep, ln)
@@ -244,7 +201,7 @@ class IngestPipeline:
         admit_docs = (
             build_admit()
             if kn_ids is None
-            else self._cached("kn_admit", token, build_admit)
+            else self._cached("kn_admit", wave, build_admit)
         )
         return ChainStages(
             None,
@@ -255,8 +212,8 @@ class IngestPipeline:
         )
 
     def _sample(self, spark, stages: tuple[str, ...]) -> DataFrame | None:
-        ids = self._ready()
-        return self._stages(spark, ids, stages).sample if ids else None
+        wave = self._wave()
+        return self._stages(spark, wave, stages).sample if wave.ids else None
 
     def sample(self, spark) -> DataFrame | None:
         """The three-stage admission ledger (docs_ingest_chain)."""
@@ -296,26 +253,33 @@ class IngestPipeline:
         is the benchmark (doc_id, text) relation, an external fixed
         corpus supplied at read time; per-doc gram sets come from the
         cgrams ledger (grams are per-document deterministic, so the
-        arrival-time shingle is exact). The hits relation is
-        wave-cached and keyed by the committed batches only: a
-        pipeline's benchmark is fixed for its lifetime, and passing a
-        different one within a wave is unsupported."""
+        arrival-time shingle is exact)."""
+        from ..operators.text import INGEST_STAGES
+
+        wave = self._wave()
+        if not wave.ids:
+            return None
+        sample = self._stages(spark, wave, INGEST_STAGES).sample
+        return self._contam(spark, wave, sample, bench_docs)
+
+    def _contam(
+        self, spark, wave: Wave, sample: DataFrame, bench_docs: DataFrame
+    ) -> DataFrame:
+        """`sample` through the decontamination stage. The hits
+        relation is wave-cached and keyed by the committed batches
+        only: a pipeline's benchmark is fixed for its lifetime, and
+        passing a different one within a wave is unsupported."""
         from ..operators.text import (
-            INGEST_STAGES,
             bench_grams_of,
             contam_hits_from,
             contam_sample_from,
         )
 
-        ids = self._ready()
-        if not ids:
-            return None
-        sample = self._stages(spark, ids, INGEST_STAGES).sample
         hits = self._cached(
             "contam_hits",
-            self._wave_token(ids),
+            wave,
             lambda: contam_hits_from(
-                self._read(spark, self.cgrams_dir, ids),
+                self._read(spark, self.cgrams_dir, wave),
                 bench_grams_of(bench_docs),
             ),
         )
@@ -336,24 +300,24 @@ class IngestPipeline:
             ingest_audit_from,
         )
 
-        ids = self._ready()
-        if not ids:
+        wave = self._wave()
+        if not wave.ids:
             return None
         verdicts = self._cached(
             "audit_verdicts",
-            self._wave_token(ids),
+            wave,
             lambda: audit_verdicts_from(
-                self._read(spark, self.gate.out_dir, ids)
+                self._read(spark, self.gate.out_dir, wave)
             ),
         )
-        st = self._stages(spark, ids, INGEST_STAGES)
+        st = self._stages(spark, wave, INGEST_STAGES)
         return ingest_audit_from(
             verdicts,
             st.kn_ids,
             st.nd_ids,
             st.admit_docs,
             st.sample,
-            self.sample_contam(spark, bench_docs),
+            self._contam(spark, wave, st.sample, bench_docs),
         )
 
     def dedup(self, spark) -> DataFrame | None:
@@ -363,23 +327,19 @@ class IngestPipeline:
         min-struct agg + join-back over every committed line), so it
         goes through the wave cache: a second dedup() in the same wave
         reuses the materialization; a new wave or a replayed overwrite
-        bumps the token and unpersists the stale entry."""
+        moves the Wave and unpersists the stale entry."""
         from ..operators.dedup import c4_line_dedup_from
 
-        ids = self._ready()
-        if not ids:
+        wave = self._wave()
+        if not wave.ids:
             return None
 
         def build() -> DataFrame:
-            docs = self._read(
-                spark, self.lines.out_dir, [f"{d}/docs" for d in ids]
-            )
-            ln = self._read(
-                spark, self.lines.out_dir, [f"{d}/lines" for d in ids]
-            )
+            docs = self._read(spark, self.lines.out_dir, wave, sub="docs")
+            ln = self._read(spark, self.lines.out_dir, wave, sub="lines")
             return c4_line_dedup_from(docs, ln)
 
-        return self._cached("line_dedup", self._wave_token(ids), build)
+        return self._cached("line_dedup", wave, build)
 
     # -- the per-batch step -------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -399,9 +359,7 @@ class IngestPipeline:
             .select("doc_id"),
             "doc_id",
         )
-        kept.select("doc_id", "lang").write.mode("overwrite").parquet(
-            os.path.join(self.langs_dir, f"batch={batch_id}")
-        )
+        land(kept.select("doc_id", "lang"), self.langs_dir, batch_id)
         # the per-document inputs of the read-time stages, amortized to
         # arrival: signature blocks (near-dup), per-doc bigram counts
         # (KN band) and distinct contamination 5-grams (decontam; the
@@ -412,27 +370,7 @@ class IngestPipeline:
             (bigram_per_doc, self.grams_dir),
             (doc_grams_of, self.cgrams_dir),
         ):
-            kernel(text).write.mode("overwrite").parquet(
-                os.path.join(root, f"batch={batch_id}")
-            )
+            land(kernel(text), root, batch_id)
         # lines land LAST: until they commit the batch is invisible to
         # every composed surface (the intersection rule above)
         self.lines.process_batch(text, batch_id)
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the pipeline over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -18,11 +18,9 @@ bit-identical (tests/test_streaming.py pins this).
 Scale shape per batch: one batch-sized explode + (doc_id, dl, term)
 aggregation (map-side partials), one partitioned write; stats are one
 1-row aggregate per batch, summed (exact integers) at search time.
-Replayed micro-batches overwrite their own `batch=<id>` directory —
-exactly-once output from at-least-once foreachBatch, the
-SimHashNearDupIndex / EmbedIvfIndex discipline. Documents are atomic
-per batch (a doc_id never splits across micro-batches), so per-batch
-tf rows are final.
+Both relations are ledger batches (streaming/ledger.py). Documents are
+atomic per batch (a doc_id never splits across micro-batches), so
+per-batch tf rows are final.
 """
 
 from __future__ import annotations
@@ -32,6 +30,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ledger import Ledger, committed_batches, land, read
 
 DOC_STREAM_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, "
@@ -52,49 +52,38 @@ def term_bucket_py(term: str) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[0], 16)
 
 
-class LexicalPostingsIndex:
+class LexicalPostingsIndex(Ledger):
     """Maintains a term-bucket-partitioned BM25 postings index under
     `out_dir` from a streaming document feed."""
 
     def __init__(self, out_dir: str):
-        self.out_dir = out_dir
+        super().__init__(out_dir)
         self.postings_dir = os.path.join(out_dir, "postings")
         self.stats_dir = os.path.join(out_dir, "stats")
         os.makedirs(self.postings_dir, exist_ok=True)
         os.makedirs(self.stats_dir, exist_ok=True)
 
     # -- read-back surfaces -------------------------------------------
-    def _batch_dirs(self, root: str) -> list[str]:
+    def _read(self, spark, root: str) -> DataFrame | None:
         # a batch is visible only when BOTH its postings and its stats
-        # job committed (streaming/ledger.py): a crash between the two
-        # writes must not let the index rank with stats that don't
-        # count the batch's documents (the BM25 normalization would
-        # silently drift until replay) — same torn-batch class the r8
-        # advice flagged on the C4 line ledger
-        from .ledger import committed_batch_ids
-
-        ready = committed_batch_ids(self.postings_dir) & committed_batch_ids(
-            self.stats_dir
-        )
-        return sorted(os.path.join(root, d) for d in ready)
+        # job committed: a crash between the two writes must not let
+        # the index rank with stats that don't count the batch's
+        # documents (the BM25 normalization would silently drift until
+        # replay)
+        ids = committed_batches(self.postings_dir, self.stats_dir).ids
+        return read(spark, root, ids, keep_batch=True)
 
     def postings(self, spark) -> DataFrame | None:
         """The whole index: (doc_id, dl, w, tf, tb, batch)."""
-        parts = self._batch_dirs(self.postings_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.postings_dir)
-        return spark.read.option("basePath", self.postings_dir).parquet(*parts)
+        return self._read(spark, self.postings_dir)
 
     def stats(self, spark) -> DataFrame | None:
         """Corpus stats folded across batches: 1 row (n_docs,
         tot_tokens) — exact integer sums, so BM25 normalization equals
         a full-corpus aggregate without touching the corpus."""
-        parts = self._batch_dirs(self.stats_dir)
-        if not parts:
+        per_batch = self._read(spark, self.stats_dir)
+        if per_batch is None:
             return None
-        spark.catalog.refreshByPath(self.stats_dir)
-        per_batch = spark.read.option("basePath", self.stats_dir).parquet(*parts)
         return per_batch.agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("tot_tokens").alias("tot_tokens"),
@@ -131,30 +120,9 @@ class LexicalPostingsIndex:
             .agg(F.count(F.lit(1)).alias("tf"))
             .withColumn("tb", _term_bucket(F.col("w")))
         )
-        postings.write.mode("overwrite").partitionBy("tb").parquet(
-            os.path.join(self.postings_dir, f"batch={batch_id}")
-        )
-        lengths.agg(
+        land(postings, self.postings_dir, batch_id, partition_by="tb")
+        stats = lengths.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("dl").alias("tot_tokens"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(self.stats_dir, f"batch={batch_id}")
         )
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the index maintainer over a streaming document feed;
-        returns the StreamingQuery. `available_now=True` drains the
-        current source contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(stats, self.stats_dir, batch_id)

@@ -11,9 +11,9 @@ arrives later — and doc_id order, not arrival order, is the house
 tie-break). C4LineLedger therefore maintains the INPUTS incrementally
 and makes the decision at read time: each micro-batch lands its
 (doc_id, line_no, line) relation and its (doc_id, n_lines) doc list —
-both through the batch query's own c4_lines_of kernel — into a
-`batch=<id>` directory (overwritten on replay: exactly-once output
-from at-least-once foreachBatch, the house discipline). The read-back
+both through the batch query's own c4_lines_of kernel — as the two
+nested relations `lines` and `docs` of one ledger batch
+(streaming/ledger.py). The read-back
 dedups cross-batch doc redelivery (the line relation is deterministic
 per document, so DISTINCT over full rows is exact) and runs
 operators/dedup.c4_line_dedup_from VERBATIM, so the streaming surface
@@ -30,43 +30,29 @@ global is updated in place.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from .ledger import Ledger, committed_batches, land, read
 
 LINES_STREAM_SCHEMA = "doc_id bigint, text string"
 
 
-class C4LineLedger:
+class C4LineLedger(Ledger):
     """Maintains the C4 line relation under `out_dir` from a streaming
     document feed; `dedup()` is the docs_c4_line_dedup relation over
     every document seen so far."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        os.makedirs(out_dir, exist_ok=True)
+    # a batch lands two nested relations, `batch=<id>/{docs,lines}`
+    SUBS = ("docs", "lines")
 
     # -- read-back surfaces -------------------------------------------
-    def _parts(self, sub: str) -> list[str]:
-        # A batch is visible only when BOTH of its relations committed
-        # (_SUCCESS from the job commit — streaming/ledger.py): a crash
-        # between the two writes leaves a torn batch that must not be
-        # half-read (r8 advice; the checkpoint replays it and the
-        # overwrite completes it). Intersecting the committed ids makes
-        # the batch appear atomically in every read-back surface; the
-        # shared helper also fails loudly if the success marker is
-        # disabled (r9 advice #2).
-        from .ledger import committed_nested_batch_ids
-
-        ok = committed_nested_batch_ids(self.out_dir, ("docs", "lines"))
-        return sorted(os.path.join(self.out_dir, d, sub) for d in ok)
-
     def _read(self, spark, sub: str) -> DataFrame | None:
-        parts = self._parts(sub)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
-        return spark.read.parquet(*parts).distinct()
+        # A batch is visible only when BOTH of its relations committed:
+        # a crash between the two writes leaves a torn batch that must
+        # not be half-read. Intersecting the committed ids makes the
+        # batch appear atomically in every read-back surface.
+        ids = committed_batches(nested={self.out_dir: self.SUBS}).ids
+        return read(spark, self.out_dir, ids, sub=sub, distinct=True)
 
     def dedup(self, spark) -> DataFrame | None:
         """Corpus-wide keep-first line dedup over the maintained
@@ -88,36 +74,12 @@ class C4LineLedger:
             "doc_id",
             F.expr("filter(split(text, ' '), x -> x != '')").alias("ws"),
         ).select("doc_id", F.expr(_C4_LINES_EXPR).alias("lines"))
-        base = os.path.join(self.out_dir, f"batch={batch_id}")
         # Lines land BEFORE docs: a crash between the two writes then
-        # leaves a batch whose docs subdir is absent (skipped by
-        # _parts; replay completes it), never a docs entry whose line
-        # relation is missing (r8 advice). A torn lines-only batch is
-        # self-healing: its rows are deterministic per document, so the
-        # replayed overwrite reproduces them bit-for-bit and the
-        # interim DISTINCT read-back already agrees with the final
-        # keep-first verdicts.
-        c4_lines_of(lined).write.mode("overwrite").parquet(
-            os.path.join(base, "lines")
-        )
-        lined.select("doc_id", F.size("lines").alias("n_lines")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "docs"))
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the ledger over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        # leaves a batch whose docs relation is absent (hidden; replay
+        # completes it), never a docs entry whose line relation is
+        # missing. A torn lines-only batch is self-healing: its rows
+        # are deterministic per document, so the replayed overwrite
+        # reproduces them bit-for-bit.
+        land(c4_lines_of(lined), self.out_dir, batch_id, sub="lines")
+        n_lines = lined.select("doc_id", F.size("lines").alias("n_lines"))
+        land(n_lines, self.out_dir, batch_id, sub="docs")

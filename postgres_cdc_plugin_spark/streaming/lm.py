@@ -12,16 +12,14 @@ surprisal, and every band verdict. No per-batch transform can emit
 final scores, so the ledger follows the ST17/ST18/ST20 pattern:
 maintain the INPUTS incrementally, decide at read time.
 
-Each micro-batch lands TWO sibling relations into `batch=<id>` dirs
-(overwritten on replay — exactly-once output from at-least-once
-foreachBatch): `grams/` carries the per-(doc, bigram) count relation
+Each micro-batch lands TWO sibling ledger roots (streaming/ledger.py):
+`grams/` carries the per-(doc, bigram) count relation
 (operators/text.bigram_per_doc VERBATIM — the tokenize/explode pass,
 the corpus-scan-heavy stage, amortized to arrival; deterministic per
 document, so DISTINCT collapses cross-batch redelivery) and `docs/`
 the (doc_id, lang) metadata (so unscoreable documents surface in
 docs_kn_band's explicit 'unscored' band instead of vanishing). A batch
-is visible only when BOTH siblings committed (the C4LineLedger
-two-relation discipline; torn batches are invisible until replay).
+is visible only when BOTH siblings committed.
 
 Read-back surfaces run the batch kernels VERBATIM over the maintained
 relation — bigram counts are SUM-mergeable, so `bigram_corpus_from`
@@ -45,41 +43,30 @@ import os
 
 from pyspark.sql import DataFrame
 
+from .ledger import Ledger, committed_batches, land, read
+
 LM_STREAM_SCHEMA = "doc_id bigint, text string, lang string"
 
 
-class BigramCountsLedger:
+class BigramCountsLedger(Ledger):
     """Maintains the per-doc bigram-count + doc-metadata relations
     under `out_dir` from a streaming document feed; kneser_ney() /
     kn_surprisal() / kn_band() are the three batch KN surfaces over
     every document seen so far."""
 
     def __init__(self, out_dir: str):
-        self.out_dir = out_dir
+        super().__init__(out_dir)
         self.grams_dir = os.path.join(out_dir, "grams")
         self.docs_dir = os.path.join(out_dir, "docs")
         os.makedirs(self.grams_dir, exist_ok=True)
         os.makedirs(self.docs_dir, exist_ok=True)
 
     # -- read-back surfaces -------------------------------------------
-    def _ready(self) -> list[str]:
-        from .ledger import committed_batch_ids
-
-        return sorted(
-            committed_batch_ids(self.grams_dir)
-            & committed_batch_ids(self.docs_dir)
-        )
-
     def _read(self, spark, root: str) -> DataFrame | None:
-        parts = self._ready()
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(root)
         # redelivered docs appear in several batch dirs with identical
         # (deterministic) rows — distinct restores the grain
-        return spark.read.parquet(
-            *[os.path.join(root, d) for d in parts]
-        ).distinct()
+        ids = committed_batches(self.grams_dir, self.docs_dir).ids
+        return read(spark, root, ids, distinct=True)
 
     def per_doc(self, spark) -> DataFrame | None:
         """(doc_id, g, c) over every document seen so far — the
@@ -121,27 +108,6 @@ class BigramCountsLedger:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from ..operators.text import bigram_per_doc
 
-        bigram_per_doc(batch.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.grams_dir, f"batch={batch_id}"))
-        batch.select("doc_id", "lang").write.mode("overwrite").parquet(
-            os.path.join(self.docs_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the ledger over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        grams = bigram_per_doc(batch.select("doc_id", "text"))
+        land(grams, self.grams_dir, batch_id)
+        land(batch.select("doc_id", "lang"), self.docs_dir, batch_id)

@@ -11,9 +11,8 @@ cutoff — so no per-batch transform can emit final verdicts.
 MixtureLedger therefore follows ST17's global-decision pattern exactly:
 maintain the INPUTS incrementally, decide at read time. Each
 micro-batch lands its per-doc (doc_id, lang, n_tokens, priority)
-relation — operators/text.mixture_doc_relation VERBATIM — into a
-`batch=<id>` directory (overwritten on replay: exactly-once output from
-at-least-once foreachBatch, the house discipline). The read-back dedups
+relation — operators/text.mixture_doc_relation VERBATIM — as one
+ledger batch (streaming/ledger.py). The read-back dedups
 cross-batch doc redelivery (the relation is deterministic per document,
 so DISTINCT over full rows is exact) and runs
 operators/text.mixture_sample_from VERBATIM, so the streaming surface
@@ -40,34 +39,25 @@ nothing global is updated in place.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from .ledger import Ledger, committed_batches, land, read
 
 MIX_STREAM_SCHEMA = "doc_id bigint, text string, lang string"
 
 
-class MixtureLedger:
+class MixtureLedger(Ledger):
     """Maintains the per-doc admission-input relation under `out_dir`
     from a streaming document feed; `sample()` is the
     docs_mixture_sample ledger over every document seen so far,
     `selected_docs()` the admitted doc ids."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        os.makedirs(out_dir, exist_ok=True)
-
     # -- read-back surfaces -------------------------------------------
     def _read(self, spark) -> DataFrame | None:
-        from .ledger import committed_batch_dirs
-
-        parts = committed_batch_dirs(self.out_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
         # redelivered docs appear in several batch dirs with identical
         # (deterministic) rows — distinct restores doc grain
-        return spark.read.parquet(*parts).distinct()
+        ids = committed_batches(self.out_dir).ids
+        return read(spark, self.out_dir, ids, distinct=True)
 
     def sample(self, spark) -> DataFrame | None:
         """The admission ledger over the maintained relation —
@@ -121,24 +111,4 @@ class MixtureLedger:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from ..operators.text import mixture_doc_relation
 
-        mixture_doc_relation(batch).write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the ledger over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(mixture_doc_relation(batch), self.out_dir, batch_id)

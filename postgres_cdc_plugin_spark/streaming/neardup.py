@@ -13,9 +13,8 @@ labels. This ledger therefore follows the ST17/ST18 global-decision
 pattern exactly: maintain the INPUTS incrementally, decide at read
 time.
 
-Each micro-batch lands ONE relation into a `batch=<id>` directory
-(overwritten on replay — exactly-once output from at-least-once
-foreachBatch, the house discipline): the document metadata columns
+Each micro-batch lands ONE relation as a ledger batch
+(streaming/ledger.py): the document metadata columns
 joined LEFT onto the per-doc SimHash signature blocks
 (operators/dedup._simhash_blocks_df VERBATIM — the expensive
 tokenize/hash-vote pass amortized to arrival time; a doc with no
@@ -43,36 +42,27 @@ place.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from .ledger import Ledger, committed_batches, land, read
 
 NEARDUP_STREAM_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
 
 
-class NearDupClusterLedger:
+class NearDupClusterLedger(Ledger):
     """Maintains the per-doc (meta + SimHash signature) relation under
     `out_dir` from a streaming document feed; clusters() /
     survivors() / softdedup_weights() are the three batch cluster
     policies over every document seen so far."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        os.makedirs(out_dir, exist_ok=True)
-
     # -- read-back surfaces -------------------------------------------
     def _read(self, spark) -> DataFrame | None:
-        from .ledger import committed_batch_dirs
-
-        parts = committed_batch_dirs(self.out_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
         # redelivered docs appear in several batch dirs with identical
         # (deterministic) rows — distinct restores doc grain
-        return spark.read.parquet(*parts).distinct()
+        ids = committed_batches(self.out_dir).ids
+        return read(spark, self.out_dir, ids, distinct=True)
 
     def _pairs(self, spark, rel: DataFrame) -> DataFrame:
         from ..operators.dedup import _SIMHASH_BLOCKS, simhash_block_pairs
@@ -122,24 +112,4 @@ class NearDupClusterLedger:
         rel = batch.select(
             "doc_id", "lang", "source", "n_chars"
         ).join(blocks, "doc_id", "left")
-        rel.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the ledger over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(rel, self.out_dir, batch_id)

@@ -9,12 +9,11 @@ gated ON ARRIVAL, with the verdict durable so downstream stages
 (dedup, chunking, packing) read an always-current keep set instead of
 re-running the gate. GopherQualityLedger runs each micro-batch through
 the SAME operators.text.gopher_rules_df kernel and lands the per-doc
-per-rule verdict relation in a `batch=<id>` directory (overwritten on
-replay: exactly-once output from at-least-once foreachBatch, the house
-discipline). The read-back dedups cross-batch doc redelivery — gate
-verdicts are deterministic per document, so DISTINCT over full rows is
-exact — and is bit-equal to the batch gate over the same document set
-(pinned in tests/test_streaming.py).
+per-rule verdict relation as a ledger batch (streaming/ledger.py). The
+read-back dedups cross-batch doc redelivery — gate verdicts are
+deterministic per document, so DISTINCT over full rows is exact — and
+is bit-equal to the batch gate over the same document set (pinned in
+tests/test_streaming.py).
 
 Scale shape per batch: the gate is the zero-shuffle higher-order
 projection the batch query is; the stored relation is doc grain with
@@ -24,35 +23,25 @@ append-only verdict log whose read-back costs one distinct.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from .ledger import Ledger, committed_batches, land, read
 
 GATE_STREAM_SCHEMA = "doc_id bigint, text string"
 
 
-class GopherQualityLedger:
+class GopherQualityLedger(Ledger):
     """Maintains the per-document Gopher gate-verdict relation under
     `out_dir` from a streaming document feed; `verdicts()` is the
     docs_gopher_rules relation over every document seen so far,
     `kept_docs()` the admitted doc ids."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        os.makedirs(out_dir, exist_ok=True)
-
     # -- read-back surfaces -------------------------------------------
     def verdicts(self, spark) -> DataFrame | None:
-        from .ledger import committed_batch_dirs
-
-        parts = committed_batch_dirs(self.out_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
-        raw = spark.read.option("basePath", self.out_dir).parquet(*parts)
         # redelivered docs appear in several batch dirs with identical
         # (deterministic) verdict rows — distinct restores doc grain
-        return raw.drop("batch").distinct()
+        ids = committed_batches(self.out_dir).ids
+        return read(spark, self.out_dir, ids, distinct=True)
 
     def kept_docs(self, spark) -> DataFrame | None:
         v = self.verdicts(spark)
@@ -64,24 +53,4 @@ class GopherQualityLedger:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from ..operators.text import gopher_rules_df
 
-        gopher_rules_df(batch).write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the gate over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(gopher_rules_df(batch), self.out_dir, batch_id)

@@ -62,7 +62,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..config import SubscriptionConfig
+from ..config import SubscriptionConfig, backoff_seconds
 from ..functions.scalar import backoff_delay
 from .deliver import (
     deliver_and_log,
@@ -127,12 +127,6 @@ _EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
 def _epoch_micros(now: datetime.datetime | None) -> int:
     return (_as_utc(now) - _EPOCH) // datetime.timedelta(microseconds=1)
-
-
-def _backoff_seconds(backoff: str, interval: int, n: int) -> int:
-    """functions.scalar.backoff_delay in Python: LINEAR => interval,
-    otherwise interval * 2^n (the fold's rule, src/cdc_webhook.c:103-109)."""
-    return interval if backoff == "LINEAR" else interval * int(2.0**n)
 
 
 def _local_path(uri: str) -> str:
@@ -790,7 +784,7 @@ class EventQueue:
             if ok or p.attempt_count >= p.retry_number + 1:
                 del ws.pending[eid]  # DELIVERED or FAILED
             else:
-                delay = _backoff_seconds(
+                delay = backoff_seconds(
                     p.retry_backoff, p.retry_interval, p.attempt_count - 1
                 )
                 # timestamp_seconds(double): micros truncated toward zero

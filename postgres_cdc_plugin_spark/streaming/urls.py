@@ -5,13 +5,11 @@ The batch docs_url_host_stats aggregates the whole corpus at once; a
 crawler discovers documents continuously. UrlHostLedger keeps the
 doc-grain canonical-URL relation live — each micro-batch's documents
 run through the SAME operators.dedup._url_parts canonicalization kernel
-and land as (doc_id, host, canon_url) rows in a `batch=<id>` directory
-(overwritten on replay: exactly-once output from at-least-once
-foreachBatch, the house discipline) — and the read-back dedups
-cross-batch doc redelivery on doc_id and runs
-operators.dedup.host_stats_from_urls VERBATIM, so the streaming surface
-is bit-equal to the batch query given the same document set (pinned in
-tests/test_streaming.py).
+and land as (doc_id, host, canon_url) rows in a ledger batch
+(streaming/ledger.py) — and the read-back dedups cross-batch doc
+redelivery and runs operators.dedup.host_stats_from_urls VERBATIM, so
+the streaming surface is bit-equal to the batch query given the same
+document set (pinned in tests/test_streaming.py).
 
 Scale shape per batch: the canonicalization is the zero-shuffle per-row
 rewrite; the stored relation is doc grain with three short columns —
@@ -21,35 +19,25 @@ costs, on an always-current corpus.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from .ledger import Ledger, committed_batches, land, read
 
 DOC_STREAM_SCHEMA = "doc_id bigint, source string"
 
 
-class UrlHostLedger:
+class UrlHostLedger(Ledger):
     """Maintains the doc-grain canonical-URL relation under `out_dir`
     from a streaming document feed; `host_stats()` reports per-host
     crawl volume / distinct canonical URLs / duplicate rate through the
     batch kernel."""
 
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        os.makedirs(out_dir, exist_ok=True)
-
     # -- read-back surfaces -------------------------------------------
     def url_docs(self, spark) -> DataFrame | None:
-        from .ledger import committed_batch_dirs
-
-        parts = committed_batch_dirs(self.out_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
-        raw = spark.read.option("basePath", self.out_dir).parquet(*parts)
         # a document redelivered across micro-batches appears in both
         # batch dirs — the ledger's grain is the DISTINCT document
-        return raw.select("doc_id", "host", "canon_url").distinct()
+        ids = committed_batches(self.out_dir).ids
+        return read(spark, self.out_dir, ids, distinct=True)
 
     def host_stats(self, spark) -> DataFrame | None:
         """Per-host dedup bookkeeping over the maintained relation —
@@ -66,24 +54,4 @@ class UrlHostLedger:
         from ..operators.dedup import _url_parts
 
         rows = _url_parts(batch).select("doc_id", "host", "canon_url")
-        rows.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        doc_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the ledger over a streaming document feed; returns the
-        StreamingQuery. `available_now=True` drains the current source
-        contents and terminates (backfill/test mode)."""
-        writer = (
-            doc_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(rows, self.out_dir, batch_id)

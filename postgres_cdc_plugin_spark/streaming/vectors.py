@@ -14,22 +14,21 @@ Scale shape per batch: the k-row codebook broadcasts; the argmin is
 the embed_pq_codes partial min-struct aggregation (map-side combine,
 one ~batch-sized shuffle); the write IS the partition-by-cell layout
 that makes probes partition pruning (tests/test_plans.py
-test_ivf_cell_layout_prunes_partitions). Replayed micro-batches
-overwrite their own `batch=<id>` directory — exactly-once output from
-at-least-once foreachBatch, the SimHashNearDupIndex discipline.
+test_ivf_cell_layout_prunes_partitions). Each micro-batch is one ledger
+batch (streaming/ledger.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ledger import Ledger, committed_batches, land, read
 
 VEC_STREAM_SCHEMA = "vec_id bigint, embedding array<float>, label int, ts timestamp"
 
 
-class EmbedIvfIndex:
+class EmbedIvfIndex(Ledger):
     """Maintains a cell-partitioned vector index under `out_dir` from a
     streaming embedding feed, assigning with the frozen `centroids`
     relation ((cell, cv) — the _centroid_vecs shape, round-6 means so
@@ -37,21 +36,15 @@ class EmbedIvfIndex:
     embed_ivf_assign bit-for-bit given the same codebook)."""
 
     def __init__(self, out_dir: str, centroids: DataFrame):
-        self.out_dir = out_dir
+        super().__init__(out_dir)
         self.centroids = centroids
-        os.makedirs(out_dir, exist_ok=True)
 
     # -- read-back surfaces -------------------------------------------
     def index(self, spark) -> DataFrame | None:
         """The whole index: (vec_id, label, sq_dist, embedding, cell,
         batch)."""
-        from .ledger import committed_batch_dirs
-
-        parts = committed_batch_dirs(self.out_dir)
-        if not parts:
-            return None
-        spark.catalog.refreshByPath(self.out_dir)
-        return spark.read.option("basePath", self.out_dir).parquet(*parts)
+        ids = committed_batches(self.out_dir).ids
+        return read(spark, self.out_dir, ids, keep_batch=True)
 
     def probe(self, spark, cells: list[int]) -> DataFrame | None:
         """Vectors of the probed cells only. The cell predicate lands in
@@ -91,24 +84,4 @@ class EmbedIvfIndex:
                 F.col("b.cell").cast("int").alias("cell"),
             )
         )
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(
-        self,
-        vec_stream: DataFrame,
-        checkpoint: str,
-        available_now: bool = False,
-    ):
-        """Run the index maintainer over a streaming embedding feed;
-        returns the StreamingQuery. `available_now=True` drains the
-        current source contents and terminates (backfill/test mode)."""
-        writer = (
-            vec_stream.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        land(assigned, self.out_dir, batch_id, partition_by="cell")

@@ -1591,8 +1591,10 @@ def test_queue_state_collapses_duplicate_event_and_attempt_rows(spark, tmp_path)
 def test_backoff_seconds_matches_backoff_delay(spark):
     """The poller's Python backoff is the fold's Spark expression
     (functions.scalar.backoff_delay) for both modes, n = 0..20."""
+    from postgres_cdc_plugin_spark.config import (
+        backoff_seconds as _backoff_seconds,
+    )
     from postgres_cdc_plugin_spark.functions.scalar import backoff_delay
-    from postgres_cdc_plugin_spark.streaming.queue import _backoff_seconds
 
     cases = [
         (mode, ivl, n)
@@ -3308,7 +3310,7 @@ def test_mixture_ledger_serves_unimax_bit_equal_with_resume(
 @pytest.mark.slow  # torn-batch replay drain; crash-recovery coverage stays via test_streaming_postings_index_crash_recovery and the url-host incremental resume (r15 verify-gate tier)
 def test_torn_batches_are_invisible_until_replay(spark, tmp_path, sf_dir):
     """Crash-window safety across the ledger family (r8-advice class,
-    generalized in r9 via streaming/ledger.committed_batch_dirs): a
+    generalized in r9 via streaming/ledger.committed_batches): a
     batch directory whose parquet job never committed — no _SUCCESS, or
     one sibling relation missing — must be INVISIBLE to every read-back
     (neither a crash nor a half-read), and replaying the batch through
@@ -3443,6 +3445,150 @@ def test_disabled_success_marker_fails_loudly(spark, tmp_path, sf_dir):
         os.remove(os.path.join(cl.out_dir, "batch=0", sub, "_SUCCESS"))
     with pytest.raises(RuntimeError, match="marksuccessfuljobs"):
         cl.dedup(spark)
+
+
+def test_ledger_contract_on_a_tiny_relation(spark, tmp_path):
+    """The one storage contract every ledger lands, lists and reads
+    through (streaming/ledger.py), on a two-row relation: a torn dir,
+    a missing sibling root and a missing nested relation each hide the
+    batch; the replay shows it with the same rows and a new stamp; the
+    disabled-marker signature raises, while one unmarked dir beside a
+    committed one stays hidden without raising, and a partitioned
+    landing is no exception to either rule."""
+    import os
+
+    from postgres_cdc_plugin_spark.streaming.ledger import (
+        committed_batches,
+        land,
+        read,
+    )
+
+    def rows(frame):
+        return sorted(map(tuple, frame.collect()))
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string")
+    want = rows(df)
+    a, b, n = (str(tmp_path / name) for name in ("a", "b", "n"))
+    nested = {n: ("x", "y")}
+
+    def listing():
+        return committed_batches(a, b, nested=nested)
+
+    for root, sub in ((a, ""), (b, ""), (n, "x")):
+        land(df, root, 0, sub=sub)
+    # `y` is a partitioned landing: its files sit in `v=<value>` dirs
+    land(df, n, 0, sub="y", partition_by="v")
+    assert listing().ids == ("batch=0",)
+
+    # torn: the job died before commit, only `_temporary` is left
+    os.makedirs(os.path.join(a, "batch=1", "_temporary"))
+    assert committed_batches(a).ids == ("batch=0",)
+    # the replay lands `a`; the sibling root `b` is still missing
+    land(df, a, 1)
+    assert committed_batches(a).ids == ("batch=0", "batch=1")
+    assert committed_batches(a, b).ids == ("batch=0",)
+    # `b` lands, but the nested relation `y` is still missing
+    land(df, b, 1)
+    land(df, n, 1, sub="x")
+    assert listing().ids == ("batch=0",)
+    land(df, n, 1, sub="y", partition_by="v")
+    wave = listing()
+    assert wave.ids == ("batch=0", "batch=1")
+    assert rows(read(spark, n, ["batch=1"], sub="x")) == want
+    with_batch = read(spark, a, wave.ids, keep_batch=True)
+    assert with_batch.columns == ["k", "v", "batch"]
+    assert read(spark, a, wave.ids, distinct=True).count() == len(want)
+    assert read(spark, a, ()) is None
+
+    # an in-place replay of a committed batch: same ids and rows, new stamp
+    land(df, a, 1)
+    again = listing()
+    assert again.ids == wave.ids and again.stamp != wave.stamp
+    assert rows(read(spark, a, ["batch=1"])) == want
+
+    # marker disabled: complete-looking dirs, no `_SUCCESS` anywhere
+    os.remove(os.path.join(a, "batch=1", "_SUCCESS"))
+    assert committed_batches(a).ids == ("batch=0",)  # racing window: hidden
+    os.remove(os.path.join(a, "batch=0", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="marksuccessfuljobs"):
+        committed_batches(a)
+    for d in ("batch=0", "batch=1"):
+        os.remove(os.path.join(n, d, "y", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="marksuccessfuljobs"):
+        committed_batches(nested=nested)
+
+
+def test_ledgers_share_one_storage_contract():
+    """Only streaming/ledger.py knows how a ledger stores its batches:
+    no ledger class defines its own `attach`, and no other ledger
+    module (nor the corpus stream ingest) builds a `batch=<id>` path,
+    refreshes a path or checks `_SUCCESS`."""
+    import importlib
+    import inspect
+
+    from postgres_cdc_plugin_spark.streaming.ledger import Ledger
+
+    names = (
+        "corpus", "engagement", "ingest", "lexical", "lines", "lm",
+        "mixture", "neardup", "quality", "urls", "vectors",
+    )
+    mods = [
+        importlib.import_module(f"postgres_cdc_plugin_spark.streaming.{n}")
+        for n in names
+    ]
+    ledgers = {
+        obj
+        for m in mods
+        for obj in vars(m).values()
+        if inspect.isclass(obj)
+        and issubclass(obj, Ledger)
+        and obj.__module__ == m.__name__
+    }
+    assert len(ledgers) == len(names)
+    for cls in ledgers:
+        assert "attach" not in vars(cls), cls
+    sources = mods + [
+        importlib.import_module("postgres_cdc_plugin_spark.sources.corpus")
+    ]
+    for m in sources:
+        src = inspect.getsource(m)
+        for needle in ('"batch={', "refreshByPath", "_SUCCESS"):
+            assert needle not in src, (m.__name__, needle)
+
+
+def test_ingest_read_back_lists_once(spark, tmp_path, sf_dir, monkeypatch):
+    """One audit() lists each of the pipeline's six roots exactly once:
+    the listing that decides visibility also keys the wave cache, so
+    no second listing and no per-file walk runs."""
+    import os
+
+    from postgres_cdc_plugin_spark.session import load
+    from postgres_cdc_plugin_spark.streaming.ingest import IngestPipeline
+
+    docs = load(spark, sf_dir, "documents")
+    pipe = IngestPipeline(str(tmp_path / "lists_once"))
+    pipe.process_batch(
+        docs.filter("doc_id < 12").select("doc_id", "text", "lang"), 0
+    )
+    bench = docs.filter("doc_id < 4").select("doc_id", "text")
+
+    listed = []
+
+    def counting(fn):
+        def wrapper(path=".", *args, **kwargs):
+            if str(path).startswith(pipe.out_dir):
+                listed.append(os.path.relpath(path, pipe.out_dir))
+            return fn(path, *args, **kwargs)
+
+        return wrapper
+
+    for name in ("listdir", "scandir", "walk"):
+        monkeypatch.setattr(os, name, counting(getattr(os, name)))
+    assert pipe.audit(spark, bench) is not None
+    monkeypatch.undo()
+    assert sorted(listed) == sorted(
+        ["gate", "langs", "sigs", "grams", "cgrams", "lines"]
+    )
 
 
 def test_ingest_pipeline_bit_equal_to_batch_chain(spark, tmp_path, sf_dir):
