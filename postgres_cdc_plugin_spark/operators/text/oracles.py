@@ -2004,7 +2004,7 @@ assert "bgrams" in ORACLE_SQL["docs_ingest_chain_contam"]
 # bgrams/dgrams/hits) is reused byte-for-byte and only the final
 # SELECT is swapped for the per-stage count/token rollup, so the
 # audit's oracle observes the EXACT stage relations the chain oracle
-# admits from (mirroring ingest_chain_kn_stages + contam_sample_from
+# admits from (mirroring ingest_chain_stages + contam_sample_from
 # on the Spark side). NULL text counts 0 tokens by explicit policy.
 ORACLE_SQL["docs_ingest_chain_audit"] = (
     ORACLE_SQL["docs_ingest_chain_contam"].removesuffix(_CHAIN_CONTAM_FINAL)

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import worker_daemon
+
 
 _MAX_DRIVER_HEAP_MB = 32 * 1024
 
@@ -58,6 +60,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
+        # Python workers fork from the engine's daemon, which skips the
+        # per-task re-read of zip archives that have not changed
+        # (worker_daemon.py); the module ships with the package the
+        # delivery closures already import on the executors.
+        .config("spark.python.daemon.module", worker_daemon.__name__)
         # local-mode driver == the only executor: the JVM default heap is
         # 1g, which starves 32 task threads + session-level persisted
         # kernels + 64MB broadcasts (the full-surface bench's warm pass
